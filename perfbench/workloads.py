@@ -2,10 +2,10 @@
 
 Each workload has a ``setup`` (input generation, store build, warm-up;
 reported as ``setup_s``), a ``warm`` that readies a fresh session over
-the same set-up state, and a ``timed`` loop that runs operations until
-the run's deadline.  Every timed operation is checked against the
-generator's truth; a wrong answer or an exception counts as failed and
-the loop goes on.
+the same set-up state, and a ``timed`` loop that runs rounds of
+operations until the run's deadline.  Every timed operation is checked
+against the generator's truth; a wrong answer or an exception counts as
+failed and the loop goes on.
 """
 
 from __future__ import annotations
@@ -29,14 +29,17 @@ from spans import Tracer
 
 N_SAMPLES = 32
 N_GENES = 200
-STORE_SITES = 20_000
-APPEND_SITES = 2_000
+STORE_SITES = 10_000
+APPEND_SITES = 1_000
+# untimed rounds of the query mix before timing: the first minute of
+# queries in a fresh JVM runs ~20% slower while the JIT catches up
+WARM_ROUNDS = 4
 PULL_IDS = 1_000
 INTERVAL_BP = 100_000
-STREAM_DOCS = 2_000
-STREAM_FILES = 8
+STREAM_DOCS = 900
+STREAM_FILES = 3
 STREAM_COMPACT_EVERY = 1
-# the index holds 8,000 band rows (4 bands x 2,000 docs): the default
+# the index holds 3,600 band rows (4 bands x 900 docs): the default
 # 64 prefix dirs would make each fold write 64 tiny files
 STREAM_N_PFX = 8
 
@@ -91,6 +94,16 @@ class Ctx:
         return result
 
 
+def timed_loop(ctx: Ctx, step) -> None:
+    """Call ``step(1)``, ``step(2)``, ... until the run's ``seconds``
+    have passed; at least once."""
+    deadline = time.perf_counter() + ctx.seconds
+    n = 0
+    while n == 0 or time.perf_counter() < deadline:
+        n += 1
+        step(n)
+
+
 # ------------------------------------------------------------- VCF reads
 
 
@@ -108,8 +121,7 @@ class GeneQueries:
     appends and compacted; the timed loop does no writes."""
 
     name = "gene_queries"
-    mix = {"filter": 6, "pull_ids": 1, "pull_gene": 1, "interval": 1, "gene_counts": 1}
-    throughput = tuple(mix)
+    mix = {"filter": 3, "pull_ids": 1, "pull_gene": 1, "interval": 1, "gene_counts": 1}
 
     def build(self, ctx: Ctx, vcf: str, store: str) -> None:
         from vcfdbr_spark import read_vcf, write_vcfdb
@@ -230,38 +242,32 @@ class GeneQueries:
         ctx.info["engine_setup_s"] = time.perf_counter() - t0
         in_bytes = ctx.info["vcf.input_bytes"] + ctx.info.get("append_input_bytes", 0)
         ctx.info["bytes_per_input_byte"] = parquet_stats(self.store)[1] / in_bytes
-        self.warm(ctx)
+        self.warm(ctx, WARM_ROUNDS)
 
-    def warm(self, ctx: Ctx) -> None:
-        """One checked call of each query shape."""
+    def warm(self, ctx: Ctx, rounds: int = 0) -> None:
+        """Open the store, then ``rounds`` checked, untimed rounds of the
+        mix (at least one call of each query shape)."""
         t0 = time.perf_counter()
         self.open(ctx, self.store)
-        rng = np.random.default_rng([ctx.seed, 1])
-        self.filter(ctx, "warm", 0)
-        self.pull_ids(ctx, "warm", rng)
-        self.pull_gene(ctx, "warm", 1)
-        self.interval(ctx, "warm", rng)
-        self.gene_counts(ctx, "warm")
+        for r in range(max(1, rounds)):
+            self.round(ctx, np.random.default_rng([ctx.seed, 1, r]), kind="warm")
         ctx.info["engine_setup_s"] = ctx.info.get("engine_setup_s", 0) + time.perf_counter() - t0
 
-    def round(self, ctx: Ctx, rng) -> None:
-        """The hot gene and five uniform genes, a uniform 1,000-id pull,
+    def round(self, ctx: Ctx, rng, kind: str | None = None) -> None:
+        """The hot gene and two uniform genes, a uniform 1,000-id pull,
         a genotype pull of one of the 20 next-largest genes, one 100 kb
-        interval and the all-gene count."""
-        self.filter(ctx, "filter", 0)
-        for g in rng.choice(N_GENES, 5, replace=False):
-            self.filter(ctx, "filter", int(g))
-        self.pull_ids(ctx, "pull_ids", rng)
-        self.pull_gene(ctx, "pull_gene", int(rng.integers(1, 21)))
-        self.interval(ctx, "interval", rng)
-        self.gene_counts(ctx, "gene_counts")
+        interval and the all-gene count.  Samples go under each op's
+        name, or all under ``kind``."""
+        self.filter(ctx, kind or "filter", 0)
+        for g in rng.choice(N_GENES, 2, replace=False):
+            self.filter(ctx, kind or "filter", int(g))
+        self.pull_ids(ctx, kind or "pull_ids", rng)
+        self.pull_gene(ctx, kind or "pull_gene", int(rng.integers(1, 21)))
+        self.interval(ctx, kind or "interval", rng)
+        self.gene_counts(ctx, kind or "gene_counts")
 
     def timed(self, ctx: Ctx) -> None:
-        deadline = time.perf_counter() + ctx.seconds
-        r = 0
-        while r == 0 or time.perf_counter() < deadline:
-            r += 1
-            self.round(ctx, np.random.default_rng([ctx.seed, 2, r]))
+        timed_loop(ctx, lambda r: self.round(ctx, np.random.default_rng([ctx.seed, 2, r])))
 
 
 # ------------------------------------------------------------- streaming
@@ -300,10 +306,9 @@ class StreamDedup:
     ``STREAM_COMPACT_EVERY`` batches."""
 
     name = "stream_dedup"
-    # the round is one whole stream over the source; throughput counts
-    # its micro-batches
-    mix = {"stream": 1}
-    throughput = ("batch",)
+    # the round is one stream's worth of micro-batches, each at the
+    # median batch time (from the listener) over all timed streams
+    mix = {"batch": STREAM_FILES}
 
     def setup(self, ctx: Ctx) -> None:
         import pandas as pd
@@ -314,16 +319,26 @@ class StreamDedup:
         gen.write_documents(docs, src, STREAM_FILES)
         ctx.info["stream.input_bytes"] = gen.document_bytes(docs)
         self.src = src + "/*.parquet"
+        os.makedirs(ctx.path("src_warm"))
+        shutil.copy(os.path.join(src, "part-000.parquet"), ctx.path("src_warm"))
+        self.warm_src = ctx.path("src_warm", "*.parquet")
         t0 = time.perf_counter()
         frame = ctx.spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
         self.want = gen.pair_digest(minhash_dedup_pairs(frame).collect())
         ctx.info["engine_setup_s"] = time.perf_counter() - t0
         self.runs = 0
-        self.warm(ctx)
+        self.warm(ctx, stream=True)
 
-    def warm(self, ctx: Ctx) -> None:
+    def warm(self, ctx: Ctx, stream: bool = False) -> None:
+        """Register the batch listener; with ``stream``, run one untimed
+        stream over the first source file: a fresh JVM's first stream
+        takes about twice as long as the later ones."""
+        t0 = time.perf_counter()
         self.listener = BatchListener()
         ctx.spark.streams.addListener(self.listener)
+        if stream:
+            self.stream(ctx, "warm")
+        ctx.info["engine_setup_s"] = ctx.info.get("engine_setup_s", 0) + time.perf_counter() - t0
 
     def _snapshot(self, comp_dir: str, seen: dict) -> None:
         files = []
@@ -336,36 +351,41 @@ class StreamDedup:
         except OSError:
             pass  # a fold swapped the layout while listing; the next batch sees it
 
-    def timed(self, ctx: Ctx) -> None:
+    def stream(self, ctx: Ctx, kind: str) -> None:
+        """One stream into a fresh output dir.  A timed one (``kind``
+        "stream") reads the whole source, is checked, and adds its
+        batches, folds and bytes to the run's counters; the warm-up one
+        reads one file, under its own span, and is not checked."""
         from vcfdbr_spark.streaming.ingest import stream_fuzzy_dedup
 
-        deadline = time.perf_counter() + ctx.seconds
-        while self.runs == 0 or time.perf_counter() < deadline:
-            self.runs += 1
-            out = ctx.path(f"stream{self.runs}")
-            comp_dir = os.path.join(out, "band_index_compacted")
-            seen: dict = {}
-            with self.listener.lock:
-                self.listener.batches = []
-            self.listener.after_batch = lambda: self._snapshot(comp_dir, seen)
+        self.runs += 1
+        out = ctx.path(f"stream{self.runs}")
+        comp_dir = os.path.join(out, "band_index_compacted")
+        seen: dict = {}
+        with self.listener.lock:
+            self.listener.batches = []
+        self.listener.after_batch = lambda: self._snapshot(comp_dir, seen)
 
-            def check(_):
-                pairs = ctx.spark.read.parquet(out + "/pairs").select("a", "b").distinct().collect()
-                got = gen.pair_digest(pairs)
-                return got == self.want, got[0]
+        def check(_):
+            pairs = ctx.spark.read.parquet(out + "/pairs").select("a", "b").distinct().collect()
+            got = gen.pair_digest(pairs)
+            return got == self.want, got[0]
 
-            ctx.op("stream", "stream.fuzzy_dedup", lambda: stream_fuzzy_dedup(
-                ctx.spark, self.src, out, max_files_per_trigger=1,
-                compact_every=STREAM_COMPACT_EVERY, n_pfx=STREAM_N_PFX,
-            ), check)
-            # progress events arrive on the listener bus after the query ends
-            wait_until = time.perf_counter() + 10
-            while len(self.listener.batches) < STREAM_FILES and time.perf_counter() < wait_until:
-                time.sleep(0.05)
-            self.listener.after_batch = None
-            self._snapshot(comp_dir, seen)
-            with self.listener.lock:
-                batches = list(self.listener.batches)
+        timed = kind == "stream"
+        ctx.op(kind, "stream.fuzzy_dedup" if timed else "stream.warm", lambda: stream_fuzzy_dedup(
+            ctx.spark, self.src if timed else self.warm_src, out, max_files_per_trigger=1,
+            compact_every=STREAM_COMPACT_EVERY, n_pfx=STREAM_N_PFX,
+        ), check if timed else lambda _: (True, 0))
+        # progress events arrive on the listener bus after the query ends
+        n_files = STREAM_FILES if timed else 1
+        wait_until = time.perf_counter() + 10
+        while len(self.listener.batches) < n_files and time.perf_counter() < wait_until:
+            time.sleep(0.05)
+        self.listener.after_batch = None
+        self._snapshot(comp_dir, seen)
+        with self.listener.lock:
+            batches = list(self.listener.batches)
+        if timed:
             ctx.samples["batch"] += [b[1] for b in batches]
             ctx.info["stream.docs"] = ctx.info.get("stream.docs", 0) + sum(b[2] for b in batches)
             ctx.info["stream.batches"] = ctx.info.get("stream.batches", 0) + len(batches)
@@ -378,7 +398,10 @@ class StreamDedup:
                 for d in ("band_index", "band_index_compacted", "pairs")
             )
             ctx.info["bytes_per_input_byte"] = out_bytes / ctx.info["stream.input_bytes"]
-            shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(out, ignore_errors=True)
+
+    def timed(self, ctx: Ctx) -> None:
+        timed_loop(ctx, lambda _: self.stream(ctx, "stream"))
 
 
 WORKLOADS = {w.name: w for w in (GeneQueries, StreamDedup)}
