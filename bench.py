@@ -560,9 +560,10 @@ COMPACT_BUDGET = 1500  # bytes; driver tail window is 2,000 chars
 # canonical-read workloads, and the greedy most-expensive-first fill
 # rotated cheap-but-reference-comparable keys in and out of the
 # driver's view whenever costs re-ranked ("dropped_from_bench"/
-# "new_in_bench" churn in PERF round-over-round diffs).  Pinning is
-# additions-only: every previously reported key still reports; the
-# pins just cannot be displaced by the budget.
+# "new_in_bench" churn in PERF round-over-round diffs).  Pins take
+# their share of the budget first, so the greedy fill has less room:
+# an expensive unpinned key that fit before can drop out of the line
+# (``omitted`` counts it; the full line still reports every key).
 COMPACT_PINNED = (
     "filter_test_per_gene_median",
     "pull_random_ids_1000",

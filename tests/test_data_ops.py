@@ -1261,3 +1261,28 @@ def test_heavy_ngrams_planted_query_recovers_full_gapped_head(spark):
     assert row["n_top_agree"] == _HN_TOP_K
     assert row["n_planted_in_top"] == _HNP_HEADS == _HN_TOP_K
     assert row["n_candidates"] < row["vocab_size"]
+
+
+def test_set_mtime_reads_the_time_back(spark, tmp_path, monkeypatch):
+    """set_mtime lands on the local FS, and a filesystem that ignores
+    setTimes (S3A) raises an error naming it instead of passing."""
+    import os
+    from types import SimpleNamespace
+
+    import pytest
+
+    from vcfdbr_spark import fs as _fs
+
+    f = tmp_path / "part-0.parquet"
+    f.write_bytes(b"x")
+    _fs.set_mtime(spark, str(f), 1_000_000.0)
+    assert os.path.getmtime(f) == 1_000_000.0
+
+    ignoring = SimpleNamespace(
+        setTimes=lambda p, mtime, atime: None,
+        getFileStatus=lambda p: SimpleNamespace(getModificationTime=lambda: 5),
+        getScheme=lambda: "s3a",
+    )
+    monkeypatch.setattr(_fs, "_fs", lambda spark, path: (ignoring, path))
+    with pytest.raises(OSError, match="s3a:// filesystem ignored setTimes"):
+        _fs.set_mtime(spark, "s3a://bucket/part-0.parquet", 1_000_000.0)

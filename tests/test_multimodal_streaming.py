@@ -227,6 +227,39 @@ def test_stream_fuzzy_dedup_pairs_across_batches(spark, tmp_path):
     assert len(glob.glob(str(out / "band_index" / "batch=*"))) == 3
 
 
+def test_stream_fuzzy_dedup_reports_both_write_failures(
+    spark, tmp_path, monkeypatch
+):
+    """The pairs and band-index writes of a batch run concurrently;
+    when both fail the stream's error carries both, not the first."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from vcfdbr_spark.operators import dedup
+    from vcfdbr_spark.streaming.ingest import stream_fuzzy_dedup
+
+    src = tmp_path / "fail_src"
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(str(src / "f0"))
+    parquet = DataFrameWriter.parquet
+
+    def pairs_write(self, path, *args, **kwargs):
+        if "/pairs/batch=" in path:
+            raise OSError("pairs writer down")
+        return parquet(self, path, *args, **kwargs)
+
+    def index_write(*args, **kwargs):
+        raise OSError("index writer down")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", pairs_write)
+    monkeypatch.setattr(dedup, "write_band_index", index_write)
+    with pytest.raises(Exception) as err:
+        stream_fuzzy_dedup(spark, str(src) + "/*", str(tmp_path / "fail_out"))
+    assert "pairs writer down" in str(err.value)
+    assert "index writer down" in str(err.value)
+
+
 def test_sample_exact_k_plan_and_determinism(spark):
     """Exact-k sampling compiles to TakeOrderedAndProject (per-
     partition heaps, no global sort Exchange) and returns the same k

@@ -60,6 +60,15 @@ def test_pull_vars_by_id_list_and_df(db, spark):
     ids_df = spark.createDataFrame([(1,), (5,), (5,)], ["variant_id"])
     by_df = pull_vars_by_id(db.variant_geno, ids_df).collect()
     assert sorted(map(tuple, by_df)) == sorted(map(tuple, by_list))
+    # the IN-list is built from text: empty, numpy and non-integer ids
+    import numpy as np
+
+    assert pull_vars_by_id(db.variant_geno, []).count() == 0
+    by_np = pull_vars_by_id(db.variant_geno, np.array([1, 5], dtype=np.int64))
+    assert sorted(map(tuple, by_np.collect())) == sorted(map(tuple, by_list))
+    for bad in (["1) OR (1=1"], [1, 1.5]):
+        with pytest.raises(ValueError, match="must be integers"):
+            pull_vars_by_id(db.variant_geno, bad)
 
 
 def test_pull_geno_test(db, oracle):

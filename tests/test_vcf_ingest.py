@@ -350,6 +350,39 @@ def _shift_positions(src: str, dst: str, delta: int = 1_000_000) -> str:
     return dst
 
 
+def test_vcfdb_handle_pins_schema_not_listing(spark, tmp_path):
+    """A handle infers each table's schema once, so a second access
+    submits no Spark job; it lists files on every access, so a handle
+    opened before an append and a compaction reads the grown tables."""
+    from vcfdbr_spark.sources.build import append_vcf, compact_table
+    from vcfdbr_spark.sources.store import open_vcfdb, write_vcfdb
+
+    vcf = write_vcf(str(tmp_path / "a.vcf"))
+    out = str(tmp_path / "db")
+    write_vcfdb(read_vcf(spark, vcf), out, mode="table")
+    db = open_vcfdb(spark, out)
+    sc = spark.sparkContext
+
+    def jobs(group, read):
+        sc.setJobGroup(group, group)
+        try:
+            read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("vcfdb-handle-first", lambda: db.variant_geno) >= 1
+    assert jobs("vcfdb-handle-second", lambda: db.variant_geno) == 0
+    assert db.variant_info.count() == 6 and db.variant_geno.count() == 24
+
+    append_vcf(spark, _shift_positions(vcf, str(tmp_path / "b.vcf")), out)
+    compact_table(spark, out, "variant_geno")
+    assert db.variant_info.count() == 12
+    assert db.variant_geno.count() == 48
+    assert db.pull([9]).count() == 4
+
+
 def test_append_vcf_file_mode_routes_vbuckets(spark, tmp_path):
     """File-mode append: new geno rows land in their vbucket= hive
     partitions, ids continue, and the partition-pruned pull spans old

@@ -83,9 +83,24 @@ def list_files(spark: SparkSession, path: str, prefix: str = "") -> list[str]:
 def set_mtime(spark: SparkSession, path: str, mtime_sec: float) -> None:
     """Set a file's modification time (seconds) through the Hadoop FS
     — the portable ``os.utime`` for pinning a file-stream source's
-    oldest-first consumption order on any scheme."""
+    oldest-first consumption order on any scheme.
+
+    The time is read back: some filesystems (S3A) accept ``setTimes``
+    and ignore it, which would silently leave the order unpinned, so a
+    time that did not take raises ``OSError`` naming the filesystem.
+    """
     fs, p = _fs(spark, path)
-    fs.setTimes(p, int(mtime_sec * 1000), -1)
+    want = int(mtime_sec * 1000)
+    fs.setTimes(p, want, -1)
+    got = fs.getFileStatus(p).getModificationTime()
+    if abs(got - want) >= 1000:  # tolerate whole-second timestamps
+        raise OSError(
+            f"the {fs.getScheme()}:// filesystem ignored setTimes on "
+            f"{path} (modification time reads {got} ms, set {want} ms) "
+            f"— stage files whose order must be pinned on a filesystem "
+            f"that keeps modification times (e.g. spark.vcfdbr.scratch.dir "
+            f"on hdfs://)"
+        )
 
 
 def scratch_dir(spark: SparkSession, prefix: str) -> str:

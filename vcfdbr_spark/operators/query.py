@@ -11,6 +11,7 @@ row groups on the range-sorted variant_id layout.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -43,14 +44,24 @@ def pull_vars_by_id(
     """Genotype pull by id set (benchmarks/00-benchmark-functions.R:45-51).
 
     Literal lists become an IN-list predicate (pushed to Parquet
-    row-group stats on the id-sorted layout); a DataFrame id set
-    becomes a left-semi join — one distributed query replaces the
-    reference's fork-cluster per-bin loop (:22-44).
+    row-group stats on the id-sorted layout), parsed from the SQL text
+    of the ids in one JVM call — ``Column.isin`` makes one py4j call
+    per literal, which dominated a 1,000-id pull.  Every id must be an
+    integer (``int`` or a numpy integer; anything else raises
+    ``ValueError`` before the text is built), and an empty list pulls
+    no rows.  A DataFrame id set becomes a left-semi join — one
+    distributed query replaces the reference's fork-cluster per-bin
+    loop (:22-44).
     """
     if isinstance(ids, DataFrame):
         ids_df = ids.select(F.col(ids.columns[0]).alias("variant_id")).distinct()
         return variant_geno.join(ids_df, "variant_id", "left_semi")
-    ids = list(ids)
+    try:
+        ids = [operator.index(i) for i in ids]
+    except TypeError as e:
+        raise ValueError(f"variant ids must be integers: {e}") from None
+    if not ids:
+        return variant_geno.filter(F.lit(False))
     if len(ids) > 5_000:
         # a 100k-literal IN predicate bloats the plan (analysis +
         # codegen scale with expression count); past this size the id
@@ -65,7 +76,8 @@ def pull_vars_by_id(
         return variant_geno.join(
             F.broadcast(ids_df.distinct()), "variant_id", "left_semi"
         )
-    return variant_geno.filter(F.col("variant_id").isin(ids))
+    in_list = ",".join(map(str, ids))
+    return variant_geno.filter(F.expr(f"variant_id IN ({in_list})"))
 
 
 def pull_geno_test(

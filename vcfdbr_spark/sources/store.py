@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from vcfdbr_spark.sources.vcf import VcfTables
 
@@ -213,13 +214,25 @@ def write_vcfdb(
 
 class VcfDb:
     """Handle over a written store — the engine's analog of a SQLite
-    connection (benchmarks/00-benchmark-functions.R:75)."""
+    connection (benchmarks/00-benchmark-functions.R:75).
+
+    Like a connection, the handle keeps state across the queries run
+    through it: each table's schema is inferred on its first read
+    (a file listing plus a footer-reading Spark job) and pinned for
+    every later read, which then submits no job of its own.  The file
+    listing is NOT pinned: every read lists the table again, so a
+    handle sees the files ``append_vcf`` adds and the ones
+    ``compact_table`` swaps in (both keep the schema — appends refuse
+    drift).  A ``write_vcfdb`` overwrite of the same path may change
+    the schema: open a new handle after one.
+    """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         with open(f"{path}/_vcfdb_manifest.json") as fh:
             self.manifest = json.load(fh)
+        self._schemas: dict[str, StructType] = {}
 
     def table(self, name: str) -> DataFrame:
         if self.manifest.get("bucketed") and name in (
@@ -227,7 +240,13 @@ class VcfDb:
             "variant_geno",
         ):
             return self._bucketed_table(name)
-        return self.spark.read.parquet(f"{self.path}/{name}")
+        table_path = f"{self.path}/{name}"
+        schema = self._schemas.get(name)
+        if schema is None:
+            df = self.spark.read.parquet(table_path)
+            self._schemas[name] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(table_path)
 
     def _catalog_base_name(self) -> str:
         return _catalog_base(self.path)

@@ -1005,7 +1005,14 @@ def _stream_banded_dedup(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [pool.submit(w) for w in (_w_pairs, _w_index)]
+            # wait for BOTH writes and report every failure: raising
+            # only the first would hide a concurrent index-write error
             errs = [f.exception() for f in futs]
+            if all(errs):
+                raise RuntimeError(
+                    f"batch {batch_id} pairs and index writes both "
+                    f"failed: pairs: {errs[0]!r}; index: {errs[1]!r}"
+                ) from errs[0]
             if any(errs):
                 raise next(e for e in errs if e is not None)
         if post_batch is not None:
