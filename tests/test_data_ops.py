@@ -690,6 +690,41 @@ def test_band_index_pfx_mismatch_is_detected(spark, tmp_path):
     assert all(0 <= next(iter(v)) < 16 for v in by_bucket.values())
 
 
+def test_band_index_history_prunes_both_scans(spark, tmp_path):
+    """A stream probe filters BandIndex.history() — the compacted
+    layout unioned with the batch= tail — on the batch's pfx values.
+    The filter must reach BOTH parquet scans as PartitionFilters on
+    pfx; a lost pushdown would make every probe read the whole index."""
+    from vcfdbr_spark.operators.dedup import BandIndex
+    from vcfdbr_spark.plans.layout import formatted_plan
+
+    def bands(ids):
+        return spark.createDataFrame(
+            [(i, b, f"bucket-{i}-{b}") for i in ids for b in range(4)],
+            "doc_id long, band int, bucket string",
+        )
+
+    index = BandIndex(spark, str(tmp_path / "idx"), n_pfx=8)
+    index.record()
+    index.append(bands(range(0, 10)), 0)
+    index.fold(1)
+    index.append(bands(range(10, 20)), 1)
+    assert (tmp_path / "idx_compacted").exists()
+    assert len(index.tail()) == 1
+
+    history = index.history()
+    probe = history.filter(F.col("pfx").isin([2, 5]))
+    plan = formatted_plan(probe)
+    scans = plan.split("Scan parquet")[1:]
+    details = [seg for seg in scans if "PartitionFilters: [" in seg]
+    assert len(details) == 2, plan
+    for seg in details:
+        pf = seg.split("PartitionFilters: [")[1].split("]")[0]
+        assert "pfx" in pf and "IN (2,5)" in pf, pf
+    want = sorted(tuple(r) for r in history.collect() if r["pfx"] in (2, 5))
+    assert want and sorted(tuple(r) for r in probe.collect()) == want
+
+
 def test_dedup_components_local_path_matches_distributed(spark):
     """r14 optimization: below ``local_edges_max`` edges the labeling
     is solved by driver-side union-find — it must produce EXACTLY the

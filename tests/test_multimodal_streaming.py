@@ -11,11 +11,7 @@ from vcfdbr_spark.operators.multimodal import (
     fake_decode,
     frame_sample_plan,
 )
-from vcfdbr_spark.streaming.ingest import (
-    run_stream_to_memory,
-    stream_events,
-    stream_vcf_ingest,
-)
+from vcfdbr_spark.streaming.ingest import stream_vcf_ingest
 
 
 def _media(spark):
@@ -155,24 +151,6 @@ def test_frame_sample_plan(spark):
         (2, 10),
         (2, 20),
     ]
-
-
-def test_stream_events_windowed(spark, tmp_path):
-    src = str(tmp_path / "events_src")
-    spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:05:00", 1, "click", 1.0, "{}"),
-            (2, "2024-01-01 10:55:00", 1, "click", 2.0, "{}"),
-            (3, "2024-01-01 11:05:00", 2, "view", 3.0, "{}"),
-        ],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(src)
-    agg = stream_events(spark, src, watermark="1 hour", window="1 hour")
-    run_stream_to_memory(agg, "evt_agg")
-    rows = spark.sql("SELECT * FROM evt_agg ORDER BY window_start").collect()
-    assert len(rows) == 2
-    assert rows[0]["n"] == 2 and rows[0]["total"] == 3.0
-    assert rows[1]["event_type"] == "view"
 
 
 def test_stream_fuzzy_dedup_pairs_across_batches(spark, tmp_path):
@@ -629,78 +607,6 @@ def test_stream_corpus_filter_lm_gate_needs_model(spark, tmp_path):
     assert kept[0]["bits_per_bigram"] <= 2.0
 
 
-def test_stream_dedup_drops_duplicates_across_batches(spark, tmp_path):
-    from vcfdbr_spark.streaming.ingest import stream_dedup
-
-    src = tmp_path / "docs_src"
-    src.mkdir()
-    schema = "doc_id long, ts string, text string"
-    spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", "alpha"), (2, "2024-01-01 10:01:00", "beta")],
-        schema,
-    ).withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(
-        str(src / "f0")
-    )
-    # second batch: one dup of 'alpha', one new
-    spark.createDataFrame(
-        [(3, "2024-01-01 10:02:00", "alpha"), (4, "2024-01-01 10:03:00", "gamma")],
-        schema,
-    ).withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(
-        str(src / "f1")
-    )
-    dedup = stream_dedup(spark, str(src) + "/*")
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT text, doc_id FROM dedup_stream").collect()
-    texts = sorted(r["text"] for r in rows)
-    assert texts == ["alpha", "beta", "gamma"]  # dup 'alpha' dropped
-
-
-def test_stream_user_stats_state_across_batches(spark, tmp_path):
-    from vcfdbr_spark.streaming.ingest import stream_user_stats
-
-    src = tmp_path / "ev_src"
-    src.mkdir()
-    rows1 = [(1, "2024-01-01 10:00:00", 7, "click", 1.5, "{}")]
-    rows2 = [
-        (2, "2024-01-01 11:00:00", 7, "click", 2.5, "{}"),
-        (3, "2024-01-01 11:30:00", 8, "view", 4.0, "{}"),
-    ]
-    schema = (
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string"
-    )
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(rows, schema).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        ).write.parquet(str(src / f"f{i}"))
-    # one file per trigger → two micro-batches → state must carry
-    agg = stream_user_stats(
-        spark, str(src) + "/*", max_files_per_trigger=1
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("user_stats")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT user_id, max(n) AS n, max(total) AS total FROM user_stats "
-        "GROUP BY user_id ORDER BY user_id"
-    ).collect()
-    got = {r["user_id"]: (r["n"], r["total"]) for r in rows}
-    assert got[7] == (2, 4.0)  # state carried across micro-batches
-    assert got[8] == (1, 4.0)
-
-
 def test_stream_vcf_ingest_resumable(spark, tmp_path):
     vcf_dir = tmp_path / "vcf_in"
     vcf_dir.mkdir()
@@ -889,64 +795,6 @@ def test_stream_vcf_ingest_file_scheme_progress(spark, tmp_path):
     assert _fs.list_subdirs(spark, f"{out_uri}", "batch=") == []
 
 
-def test_stream_sessions_native_session_windows(spark, tmp_path):
-    """Streaming session_window sessionization equals the batch
-    lag+running-sum sessionization on the same events: same session
-    count, same (user, n_events, duration) multiset — including a
-    session that MERGES across micro-batches."""
-    from pyspark.sql import Window
-
-    from vcfdbr_spark.streaming.ingest import (
-        run_stream_to_memory,
-        stream_sessions,
-    )
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    schema = (
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string"
-    )
-    # user 1: one session (10:00-10:20), then a new one after a >30min
-    # gap; user 2: a single session SPLIT across the two files so the
-    # streaming state must merge windows across micro-batches
-    spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"),
-            (2, "2024-01-01 10:20:00", 1, "click", 2.0, "{}"),
-            (3, "2024-01-01 09:00:00", 2, "view", 3.0, "{}"),
-        ],
-        schema,
-    ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(
-        [
-            (4, "2024-01-01 11:30:00", 1, "view", 4.0, "{}"),
-            (5, "2024-01-01 09:25:00", 2, "purchase", 5.0, "{}"),
-        ],
-        schema,
-    ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.parquet(str(src / "f1"))
-
-    agg = stream_sessions(spark, str(src) + "/*")
-    run_stream_to_memory(agg, "sess_stream", output_mode="complete")
-    got = {
-        (r["user_id"], r["n_events"], r["total"])
-        for r in spark.sql("SELECT * FROM sess_stream").collect()
-    }
-    assert got == {
-        (1, 2, 3.0),   # 10:00 + 10:20 in one session
-        (1, 1, 4.0),   # 11:30 after the >30min gap
-        (2, 2, 8.0),   # 09:00 + 09:25 merged ACROSS batches
-    }
-    # session bounds: end = last event + gap
-    rows = {
-        (str(r["session_start"]), str(r["session_end"]))
-        for r in spark.sql(
-            "SELECT * FROM sess_stream WHERE user_id = 2"
-        ).collect()
-    }
-    assert rows == {("2024-01-01 09:00:00", "2024-01-01 09:55:00")}
-
-
 def test_stream_fuzzy_dedup_auto_compaction(spark, tmp_path):
     """VERDICT r6 #5: with compact_every=3, a 7-batch stream folds the
     batch=N tail into band_index_compacted/ (write-to-side + atomic
@@ -1061,54 +909,152 @@ def test_manual_compaction_folds_auto_compacted_layout(spark, tmp_path):
 
 def test_stream_compaction_crash_heal(spark, tmp_path):
     """Crash window between the two swap renames leaves only
-    band_index_compacted.old: the probe must fall back to it (no
-    lost cross-batch pairs) and the next compaction must heal it
-    back into the live layout with no debris."""
+    <index>_compacted.old: the probe must fall back to it (no lost
+    cross-batch pairs or keepers) and the next compaction must heal it
+    back into the live layout with no debris — for the fuzzy stream's
+    band index and the exact stream's hash index alike."""
     import os
 
-    from vcfdbr_spark.streaming.ingest import stream_fuzzy_dedup
+    from vcfdbr_spark.streaming.ingest import (
+        stream_exact_dedup,
+        stream_fuzzy_dedup,
+    )
 
     schema = "doc_id long, text string"
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")], schema
-    ).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(
-        [(2, "some entirely different filler content here")], schema
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    out = tmp_path / "out"
-    stream_fuzzy_dedup(
-        spark, str(src) + "/*", str(out),
-        max_files_per_trigger=1, compact_every=2,
-    )
-    comp = out / "band_index_compacted"
-    assert comp.exists()
-    # simulate a crash between `rename current -> .old` and
-    # `rename .tmp -> current`
-    os.rename(str(comp), str(comp) + ".old")
+    files = [
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        [(2, "some entirely different filler content here")],
+        # the later files each carry one unseen text too, so the exact
+        # stream's hash index grows a tail and folds again
+        [(11, "the quick brown fox jumps over the lazy dog"),
+         (13, "a third text about parquet partition layouts")],
+        [(12, "some entirely different filler content here"),
+         (14, "a fourth text on hadoop file system renames")],
+    ]
 
-    # two more files: the first batch probes THROUGH the .old
-    # fallback; the second triggers compaction, which heals
-    spark.createDataFrame(
-        [(11, "the quick brown fox jumps over the lazy dog")], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-    spark.createDataFrame(
-        [(12, "some entirely different filler content here")], schema
-    ).coalesce(1).write.parquet(str(src / "f3"))
-    stream_fuzzy_dedup(
-        spark, str(src) + "/*", str(out),
-        max_files_per_trigger=1, compact_every=2,
-    )
+    def write_files(src, ks):
+        for k in ks:
+            spark.createDataFrame(files[k], schema).coalesce(1).write.parquet(
+                str(src / f"f{k}")
+            )
+
+    def crash_then_heal(run, idx):
+        src, out = tmp_path / f"src_{idx}", tmp_path / f"out_{idx}"
+        write_files(src, (0, 1))
+        run(
+            spark, str(src) + "/*", str(out),
+            max_files_per_trigger=1, compact_every=2,
+        )
+        comp = out / f"{idx}_compacted"
+        assert comp.exists()
+        # simulate a crash between `rename current -> .old` and
+        # `rename .tmp -> current`
+        os.rename(str(comp), str(comp) + ".old")
+        # two more files: the first batch probes THROUGH the .old
+        # fallback; the second triggers compaction, which heals
+        write_files(src, (2, 3))
+        run(
+            spark, str(src) + "/*", str(out),
+            max_files_per_trigger=1, compact_every=2,
+        )
+        assert comp.exists()
+        assert not (out / f"{idx}_compacted.old").exists()
+        assert not (out / f"{idx}_compacted.tmp").exists()
+        return src, out
+
+    _, out = crash_then_heal(stream_fuzzy_dedup, "band_index")
     pairs = {
         (r["a"], r["b"])
         for r in spark.read.parquet(str(out / "pairs")).collect()
     }
     # cross-batch pairs found through the degraded (.old) index
     assert (1, 11) in pairs and (2, 12) in pairs
-    assert comp.exists()
-    assert not (tmp_path / "out" / "band_index_compacted.old").exists()
-    assert not (tmp_path / "out" / "band_index_compacted.tmp").exists()
+
+    src, out = crash_then_heal(stream_exact_dedup, "hash_index")
+    clean = tmp_path / "exact_clean"
+    stream_exact_dedup(
+        spark, str(src) + "/*", str(clean),
+        max_files_per_trigger=1, compact_every=2,
+    )
+
+    def keepers(d):
+        return {
+            r["doc_id"]: r["keep_id"]
+            for r in spark.read.parquet(str(d / "keep")).collect()
+        }
+
+    # keepers found through the .old fallback equal an uncrashed run's
+    assert keepers(out) == keepers(clean)
+    assert keepers(out)[11] == 1 and keepers(out)[12] == 2
+
+
+@pytest.mark.parametrize(
+    "stream, idx",
+    [("stream_fuzzy_dedup", "band_index"), ("stream_exact_dedup", "hash_index")],
+)
+def test_stream_restart_keeps_recorded_n_pfx(spark, tmp_path, stream, idx):
+    """The pfx modulus is baked into every batch dir, so a restart
+    with a conflicting explicit n_pfx raises naming the recorded one,
+    and a restart with n_pfx omitted resumes with the recorded one."""
+    from vcfdbr_spark.operators.dedup import band_pfx, index_n_pfx
+    from vcfdbr_spark.streaming import ingest
+
+    run = getattr(ingest, stream)
+    schema = "doc_id long, text string"
+    src, out = tmp_path / "src", str(tmp_path / "out")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")], schema
+    ).coalesce(1).write.parquet(str(src / "f0"))
+    run(spark, str(src) + "/*", out, max_files_per_trigger=1, n_pfx=16)
+    with pytest.raises(ValueError, match="n_pfx=16"):
+        run(spark, str(src) + "/*", out, n_pfx=8)
+
+    spark.createDataFrame(
+        [(10 + k, f"fresh document {k} about partition moduli")
+         for k in range(8)],
+        schema,
+    ).coalesce(1).write.parquet(str(src / "f1"))
+    run(spark, str(src) + "/*", out, max_files_per_trigger=1)
+    assert index_n_pfx(spark, f"{out}/{idx}") == 16
+    resumed = spark.read.parquet(f"{out}/{idx}/batch=1")
+    assert resumed.count() > 0
+    assert resumed.filter(
+        F.col("pfx") != band_pfx(F.col("bucket"), 16)
+    ).isEmpty()
+    # the data tells the moduli apart: the default 64 would differ
+    assert not resumed.filter(
+        F.col("pfx") != band_pfx(F.col("bucket"), 64)
+    ).isEmpty()
+
+
+def test_stream_semantic_fold_carries_band_params(spark, tmp_path):
+    """The auto-fold carries the semantic stream's pinned
+    _band_params sidecar to the compacted layout, which therefore
+    opens as an embedding band index with the pinned parameters."""
+    import json
+
+    from vcfdbr_spark.operators.similarity import read_embedding_band_index
+    from vcfdbr_spark.streaming.ingest import stream_semantic_dedup
+
+    src = tmp_path / "vec_src"
+    schema = "vec_id long, embedding array<float>, label int"
+    spark.createDataFrame(
+        [(1, [1.0] * 8, 0), (2, [1.0, -1.0] * 4, 0)], schema
+    ).coalesce(1).write.parquet(str(src / "f0"))
+    spark.createDataFrame(
+        [(11, [0.9] * 8, 0)], schema
+    ).coalesce(1).write.parquet(str(src / "f1"))
+    out = tmp_path / "sem_out"
+    stream_semantic_dedup(
+        spark, str(src) + "/*", str(out),
+        max_files_per_trigger=1, compact_every=1,
+    )
+    pinned = json.loads((out / "band_index" / "_band_params").read_text())
+    idx, bits, n_bands = read_embedding_band_index(
+        spark, str(out / "band_index_compacted")
+    )
+    assert (bits, n_bands) == (pinned["bits"], pinned["n_bands"])
+    assert idx.select("vec_id").distinct().count() == 3
 
 
 def test_manual_compaction_heals_from_old_sibling(spark, tmp_path):

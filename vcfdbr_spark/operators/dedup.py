@@ -23,9 +23,12 @@ All-pairs similarity is deliberately absent.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vcfdbr_spark import fs as _fs
 from vcfdbr_spark.functions.text import word_shingles
 
 #: Default population cap for an LSH / simhash band bucket.  A bucket
@@ -745,8 +748,6 @@ def index_n_pfx(spark, path: str) -> int | None:
     """The ``n_pfx`` a :func:`write_band_index` layout was written
     with (from its ``_n_pfx`` sidecar); ``None`` for a pre-sidecar or
     foreign layout."""
-    from vcfdbr_spark import fs as _fs
-
     raw = _fs.read_text(spark, f"{path}/_n_pfx")
     return int(raw.strip()) if raw else None
 
@@ -806,8 +807,6 @@ def write_band_index(
     # included — so it must be rewritten even when stored == n_pfx, or
     # a same-modulus rebuild silently strips the probe's mismatch guard.
     if mode != "append" or stored != n_pfx:
-        from vcfdbr_spark import fs as _fs
-
         _fs.write_text(spark, f"{path}/_n_pfx", str(n_pfx))
 
 
@@ -829,29 +828,210 @@ def read_band_index(spark, path: str, n_pfx: int | None = None) -> DataFrame:
     return spark.read.parquet(path)
 
 
+class BandIndex:
+    """A streaming band index: the one implementation of its layout,
+    its sidecar guards, the history read, the per-batch append and the
+    fold.
+
+    Layout: one :func:`write_band_index` tail dir per micro-batch at
+    ``<root>/batch=N/pfx=M/``, plus at most one folded layout at
+    ``<root>_compacted``.  A fold writes ``<root>_compacted.tmp``,
+    renames the live layout to ``.old``, renames ``.tmp`` to live,
+    then deletes ``.old`` and the folded tail dirs.  Each rename is
+    atomic on HDFS, so a crash leaves one of: ``.tmp`` debris (deleted
+    by the next fold); only ``.old`` (read by :meth:`history`
+    meanwhile, renamed back by the next fold); or tail dirs that were
+    already folded (duplicate rows, harmless: probe output is distinct
+    and the next fold's ``distinct`` drops them).
+
+    Sidecars: ``<root>/_n_pfx`` records the partition modulus baked
+    into every ``pfx=`` dir, and ``<root>/_band_params`` the optional
+    pinned banding parameters (a semantic stream's ``bits`` and
+    ``n_bands``).  Opening validates both, because a stream restarted
+    with a different modulus would prune the wrong dirs, and one
+    restarted with different band parameters would band new batches
+    into a different bucket space; either silently loses candidate
+    pairs.  An explicit value that conflicts with the recorded one
+    raises; an omitted one (``None``) resumes with the recorded value.
+    Opening writes nothing (a manual compaction stays read-only on the
+    stream's directory); :meth:`record` writes the sidecars a new
+    stream lacks, and folds carry both to the compacted layout.
+    """
+
+    def __init__(
+        self,
+        spark,
+        root: str,
+        n_pfx: int | None = None,
+        params: dict | None = None,
+    ):
+        self.spark = spark
+        self.root = root.rstrip("/")
+        self.compacted = f"{self.root}_compacted"
+        stored = index_n_pfx(spark, self.root)
+        if n_pfx is None:
+            n_pfx = DEFAULT_N_PFX if stored is None else stored
+        elif stored is not None and stored != n_pfx:
+            raise ValueError(
+                f"stream index at {self.root} was built with "
+                f"n_pfx={stored}; restarting with n_pfx={n_pfx} would "
+                f"mix partition moduli"
+            )
+        self.n_pfx = n_pfx
+        self._n_pfx_recorded = stored is not None
+        raw = _fs.read_text(spark, f"{self.root}/_band_params")
+        pinned = json.loads(raw) if raw else None
+        if pinned is not None and params is not None:
+            params = {k: pinned[k] if v is None else v for k, v in params.items()}
+            if params != {k: pinned[k] for k in params}:
+                raise ValueError(
+                    f"stream index at {self.root} is pinned at "
+                    + ", ".join(f"{k}={pinned[k]}" for k in params)
+                    + f"; restarting with {tuple(params.values())} would "
+                    f"band new batches into a different bucket space and "
+                    f"silently lose candidate pairs"
+                )
+        self.params = pinned if params is None else dict(params)
+        self._params_recorded = pinned is not None
+
+    def record(self) -> None:
+        """Write the sidecars this index has not recorded yet."""
+        if not self._n_pfx_recorded:
+            _fs.write_text(self.spark, f"{self.root}/_n_pfx", str(self.n_pfx))
+            self._n_pfx_recorded = True
+        if self.params is not None and not self._params_recorded:
+            _fs.write_text(
+                self.spark, f"{self.root}/_band_params",
+                json.dumps(self.params),
+            )
+            self._params_recorded = True
+
+    def tail(self, exclude_batch: int | None = None) -> list[str]:
+        """The ``batch=N`` tail dirs, minus ``exclude_batch``'s own."""
+        return [
+            d
+            for d in _fs.list_subdirs(self.spark, self.root, "batch=")
+            if d.rsplit("/", 1)[-1] != f"batch={exclude_batch}"
+        ]
+
+    def _read_tail(self, tail: list[str]) -> DataFrame:
+        # basePath anchors partition discovery at the root, so the
+        # batch=N dirs surface one `pfx` column the probe prunes on;
+        # without it, several batch=* roots that each hold pfx=*
+        # children are rejected as conflicting
+        return (
+            self.spark.read.option("basePath", self.root)
+            .parquet(*tail)
+            .drop("batch")
+        )
+
+    def pfxs(self, bands: DataFrame) -> list:
+        """The distinct ``pfx`` values of ``bands``' buckets, in one
+        collect bounded by ``n_pfx`` ints.  Doubles as the batch's
+        emptiness probe: ``band_pfx`` of a NULL bucket is still
+        non-null, so the list is empty exactly when ``bands`` is."""
+        return [
+            r[0]
+            for r in bands.select(
+                band_pfx(F.col("bucket"), self.n_pfx).alias("p")
+            )
+            .distinct()
+            .collect()
+        ]
+
+    def history(self, exclude_batch: int | None = None) -> DataFrame | None:
+        """Every indexed row except batch ``exclude_batch``'s own, with
+        its ``pfx`` column; ``None`` when nothing is indexed.
+
+        Reads the compacted layout (or ``.old`` when a fold died
+        between its renames) unioned with the tail.  A replayed batch
+        whose rows were already folded pairs against itself through the
+        compacted layout, which yields the same distinct pairs as its
+        own self-join, so replays stay exactly-once across a fold.  A
+        ``pfx`` ``isin`` filter on the result pushes through the union
+        into PartitionFilters on every scan."""
+        frames = []
+        for cand in (self.compacted, f"{self.compacted}.old"):
+            if _fs.exists(self.spark, cand):
+                frames.append(self.spark.read.parquet(cand))
+                break
+        tail = self.tail(exclude_batch)
+        if tail:
+            frames.append(self._read_tail(tail))
+        if not frames:
+            return None
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out
+
+    def drop(self, batch_id: int) -> None:
+        """Delete batch ``batch_id``'s tail dir, if any."""
+        _fs.delete_dir(self.spark, f"{self.root}/batch={batch_id}")
+
+    def append(self, bands: DataFrame, batch_id: int) -> None:
+        """Write ``bands`` as batch ``batch_id``'s tail dir,
+        delete-before-write so a replayed batch replaces its own rows.
+        Callers skip an empty frame (and :meth:`drop` instead): an
+        empty partitioned write leaves a dir with no parquet files,
+        which breaks every later history read."""
+        self.drop(batch_id)
+        write_band_index(
+            bands, f"{self.root}/batch={batch_id}", n_pfx=self.n_pfx,
+            mode="errorifexists",
+        )
+
+    def write(self, bands: DataFrame, path: str, n_pfx: int | None = None) -> None:
+        """Write ``bands`` as one :func:`write_band_index` layout at
+        ``path`` (modulus ``n_pfx``, default this index's), carrying
+        the pinned band parameters."""
+        write_band_index(bands, path, n_pfx=self.n_pfx if n_pfx is None else n_pfx)
+        if self.params is not None:
+            _fs.write_text(self.spark, f"{path}/_band_params", json.dumps(self.params))
+
+    def fold(self, every: int | None) -> None:
+        """Once the tail holds ``every`` dirs (``None`` never), fold it
+        and the compacted layout into a new compacted layout by the
+        swap described on the class."""
+        if not every:
+            return
+        spark, comp = self.spark, self.compacted
+        tail = self.tail()
+        if len(tail) < every:
+            return
+        old, tmp = f"{comp}.old", f"{comp}.tmp"
+        if not _fs.exists(spark, comp) and _fs.exists(spark, old):
+            _fs.rename(spark, old, comp)  # heal a half-finished swap
+        _fs.delete_dir(spark, old)
+        _fs.delete_dir(spark, tmp)
+        bands = self._read_tail(tail)
+        if _fs.exists(spark, comp):
+            bands = bands.unionByName(spark.read.parquet(comp))
+        self.write(bands.drop("pfx").distinct(), tmp)
+        if _fs.exists(spark, comp):
+            _fs.rename(spark, comp, old)
+        _fs.rename(spark, tmp, comp)
+        _fs.delete_dir(spark, old)
+        for d in tail:
+            _fs.delete_dir(spark, d)
+
+
 def compact_band_index(
     spark,
     stream_idx_dir: str,
     out_dir: str,
     n_pfx: int = DEFAULT_N_PFX,
 ) -> int:
-    """Compact a streaming band index (``batch=N/pfx=M`` partitions
-    accumulated by ``stream_fuzzy_dedup``) into ONE consolidated
-    :func:`write_band_index` layout; returns the row count.
+    """Compact a streaming :class:`BandIndex` (its ``batch=N/pfx=M``
+    tail plus any folded ``<stream_idx_dir>_compacted`` layout, or its
+    ``.old`` after a crash mid-swap) into ONE consolidated
+    :func:`write_band_index` layout at ``out_dir``; returns the row
+    count.  Works on any stream state, including one whose tail the
+    auto-fold already emptied.
 
-    Run periodically on a long-lived stream: per-batch dirs keep the
-    probe's file count growing linearly with batch count (each probe
-    lists every batch root even though pfx pruning bounds the bytes
-    read); compaction collapses them to one file set per prefix.
-    Writes to a separate ``out_dir`` (atomic swap is the caller's
-    choice — e.g. write, verify, rename over) rather than rewriting
-    in place under a live stream.
-
-    When ``stream_fuzzy_dedup``'s AUTO-compaction already folded the
-    tail, the consolidated layout lives at the
-    ``<stream_idx_dir>_compacted`` sibling — it is folded in too (and
-    suffices alone when no batch tail remains), so this CLI works on
-    any stream state.
+    Read-only on the stream's directory: it writes only ``out_dir``
+    (atomic swap is the caller's choice — e.g. write, verify, rename
+    over), never a sidecar or a fold under a live stream.
 
     Works on BOTH stream flavors: the id column (``doc_id`` for the
     MinHash text stream, ``vec_id`` for the sign-LSH embedding
@@ -860,48 +1040,22 @@ def compact_band_index(
     output so probes against the compacted index keep the pinned
     band-width guard.
     """
-    from vcfdbr_spark import fs as _fs
-
-    def _id_select(df: DataFrame) -> DataFrame:
-        ids = [c for c in df.columns
-               if c not in ("band", "bucket", "pfx", "batch")]
-        if len(ids) != 1:
-            raise ValueError(
-                f"band index layout has ambiguous id columns {ids}; "
-                f"expected exactly one besides (band, bucket)"
-            )
-        return df.select(ids[0], "band", "bucket")
-
-    batch_dirs = _fs.list_subdirs(spark, stream_idx_dir, "batch=")
-    sibling = f"{stream_idx_dir.rstrip('/')}_compacted"
-    frames = []
-    if batch_dirs:
-        frames.append(
-            _id_select(
-                spark.read.option("basePath", stream_idx_dir)
-                .parquet(*batch_dirs)
-            )
-        )
-    # Crash window: the stream's atomic swap renames current -> .old
-    # before promoting .tmp; if it died in between, ONLY `.old` holds
-    # the previously folded history.  Mirror the stream's own heal
-    # path so a manual compact in that state doesn't drop it.
-    if _fs.exists(spark, sibling):
-        frames.append(_id_select(spark.read.parquet(sibling)))
-    elif _fs.exists(spark, f"{sibling}.old"):
-        frames.append(_id_select(spark.read.parquet(f"{sibling}.old")))
-    if not frames:
+    index = BandIndex(spark, stream_idx_dir)
+    bands = index.history()
+    if bands is None:
         raise FileNotFoundError(
-            f"no batch=* partitions under {stream_idx_dir} and no "
-            f"compacted layout at {sibling}"
+            f"no batch=* partitions under {index.root} and no "
+            f"compacted layout at {index.compacted}"
         )
-    bands = frames[0]
-    for f in frames[1:]:
-        bands = bands.unionByName(f)
-    write_band_index(bands.distinct(), out_dir, n_pfx=n_pfx)
-    params = _fs.read_text(spark, f"{stream_idx_dir}/_band_params")
-    if params:
-        _fs.write_text(spark, f"{out_dir}/_band_params", params)
+    ids = [c for c in bands.columns if c not in ("band", "bucket", "pfx")]
+    if len(ids) != 1:
+        raise ValueError(
+            f"band index layout has ambiguous id columns {ids}; "
+            f"expected exactly one besides (band, bucket)"
+        )
+    index.write(
+        bands.select(ids[0], "band", "bucket").distinct(), out_dir, n_pfx=n_pfx
+    )
     return spark.read.parquet(out_dir).count()
 
 

@@ -5,17 +5,15 @@ resumable ingest loop (pipeline/02-build-db.R:249-529) is exactly the
 contract Structured Streaming provides natively: source offsets +
 checkpointLocation replace the .progress.RData file, and
 ``Trigger.AvailableNow`` replaces the --end-chunk partial-run flag
-(pipeline/02-build-db.R:34-38).  We expose:
+(pipeline/02-build-db.R:34-38).
 
-- ``stream_events``: watermarked tumbling-window aggregation over an
-  event stream — the streaming rendering of the batch
-  ``events_hourly`` query (same logical plan, incremental state).
-- ``stream_vcf_ingest``: file-source streaming VCF ingest, three-table
-  parity with the batch path.  Dense global ids can't come from a
-  streaming window; ``foreachBatch`` assigns per-batch dense ids
-  continuing from an O(1) manifest carry (``_stream_progress.json``)
-  — the exact analog of the reference's cross-chunk ``index_start``
-  carry (pipeline/02-build-db.R:258-259, :522).
+``stream_vcf_ingest`` is the file-source streaming VCF ingest, with
+three-table parity with the batch path.  Dense global ids can't come
+from a streaming window; ``foreachBatch`` assigns per-batch dense ids
+continuing from an O(1) manifest carry (``_stream_progress.json``) —
+the exact analog of the reference's cross-chunk ``index_start`` carry
+(pipeline/02-build-db.R:258-259, :522).  The dedup streams keep their
+history in an ``operators.dedup.BandIndex``.
 """
 
 from __future__ import annotations
@@ -23,114 +21,6 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def stream_events(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Watermarked windowed aggregation over a file-source stream.
-    Late rows beyond the watermark are dropped from state — bounded
-    memory at any scale."""
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(source_dir)
-    )
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total")
-    )
-
-
-def run_stream_to_memory(
-    agg: DataFrame, query_name: str, output_mode: str = "complete"
-) -> None:
-    """Drain an aggregation stream into an in-memory table with
-    AvailableNow (process-everything-then-stop) semantics."""
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "doc_id long, ts timestamp, text string",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Streaming exact dedup: first-seen wins on the content hash,
-    duplicate arrivals dropped from the stream — the streaming twin of
-    ``operators.dedup.exact_dedup``.
-
-    Uses ``dropDuplicatesWithinWatermark``: plain ``dropDuplicates``
-    on a subset NOT containing the event-time column never evicts its
-    state (unbounded growth on a long-running stream); the
-    within-watermark variant expires each hash once it is older than
-    the watermark, so state is genuinely bounded."""
-    stream = spark.readStream.schema(schema).format("parquet").load(source_dir)
-    return (
-        stream.withColumn("text_hash", F.md5("text"))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["text_hash"])
-    )
-
-
-def _compact_stream_index(
-    spark: SparkSession, idx_dir: str, comp_dir: str, n_pfx: int,
-    id_col: str = "doc_id",
-) -> None:
-    """Fold the accumulated ``batch=N`` tail dirs (plus any existing
-    compacted layout) into ONE consolidated :func:`write_band_index`
-    layout at ``comp_dir`` — write-to-side then atomic-swap, never a
-    rewrite under the live reader.
-
-    Swap protocol (each rename is atomic on HDFS): write ``.tmp`` →
-    rename current → ``.old`` → rename ``.tmp`` → current → delete
-    ``.old`` + tail dirs.  Crash windows: only ``.old`` present →
-    healed (renamed back) at the next compaction, and the probe falls
-    back to it meanwhile; partial tail deletion → duplicate rows,
-    harmless (probe output is distinct) and removed by the next
-    compaction's ``distinct``.
-    """
-    from vcfdbr_spark import fs as _fs
-    from vcfdbr_spark.operators.dedup import write_band_index
-
-    comp_old, comp_tmp = f"{comp_dir}.old", f"{comp_dir}.tmp"
-    if not _fs.exists(spark, comp_dir) and _fs.exists(spark, comp_old):
-        _fs.rename(spark, comp_old, comp_dir)  # heal half-finished swap
-    _fs.delete_dir(spark, comp_old)
-    _fs.delete_dir(spark, comp_tmp)
-    tail = _fs.list_subdirs(spark, idx_dir, "batch=")
-    if not tail:
-        return
-    allb = (
-        spark.read.option("basePath", idx_dir)
-        .parquet(*tail)
-        .select(id_col, "band", "bucket")
-    )
-    if _fs.exists(spark, comp_dir):
-        allb = allb.unionByName(
-            spark.read.parquet(comp_dir).select(id_col, "band", "bucket")
-        )
-    write_band_index(allb.distinct(), comp_tmp, n_pfx=n_pfx)
-    if _fs.exists(spark, comp_dir):
-        _fs.rename(spark, comp_dir, comp_old)
-    _fs.rename(spark, comp_tmp, comp_dir)
-    _fs.delete_dir(spark, comp_old)
-    for d in tail:
-        _fs.delete_dir(spark, d)
 
 
 def stream_fuzzy_dedup(
@@ -153,14 +43,16 @@ def stream_fuzzy_dedup(
 
     Layout under ``out_dir``:
 
-    - ``band_index/batch=N/pfx=M/`` — ``(doc_id, band, bucket)``, the
-      growing index, sub-partitioned by the bucket prefix
+    - ``band_index`` — ``(doc_id, band, bucket)``, the growing
+      :class:`~vcfdbr_spark.operators.dedup.BandIndex` (per-batch tail
+      dirs plus a folded layout), sub-partitioned by the bucket prefix
       ``pmod(hash(bucket), n_pfx)`` (``operators.dedup.band_pfx``) so
       a probe only READS the ``pfx=`` directories its own buckets
       hash into — per-batch probe I/O is bounded by the batch's
       bucket spread, not the accumulated index size (a flat layout
       re-scans the whole index every batch: O(batches·index)
-      cumulative, the streaming scale-killer).
+      cumulative, the streaming scale-killer).  A restart must reuse
+      the recorded ``n_pfx``; omitted, it resumes with it.
     - ``pairs/batch=N/`` — ``(a, b)`` candidate pairs per batch.
 
     Exactly-once under replays: both writes go to per-batch partition
@@ -177,16 +69,16 @@ def stream_fuzzy_dedup(
     index itself stays complete — the cap is a query-time policy, so
     re-probing with a different cap needs no index rebuild.
 
-    ``compact_every``: once the ``batch=N`` tail reaches this many
-    dirs, the batch folds them (and any previous compacted layout)
-    into one consolidated layout at ``band_index_compacted/`` via
-    write-to-side + atomic swap (:func:`_compact_stream_index`).
-    Without it a long-lived stream's probe must LIST every batch dir
-    ever written — file-listing cost grows linearly with stream age
-    even though pfx pruning bounds the bytes read.  ``None`` disables
-    (the manual ``compact-band-index`` CLI remains).
+    ``compact_every``: once the tail reaches this many batch dirs,
+    the batch folds them into the index's compacted layout
+    (:meth:`~vcfdbr_spark.operators.dedup.BandIndex.fold`).  Without
+    it a long-lived stream's probe must LIST every batch dir ever
+    written — file-listing cost grows linearly with stream age even
+    though pfx pruning bounds the bytes read.  ``None`` disables (the
+    manual ``compact-band-index`` CLI remains).
     """
     from vcfdbr_spark.operators.dedup import (
+        BandIndex,
         minhash_band_buckets,
         minhash_signatures,
     )
@@ -197,9 +89,9 @@ def stream_fuzzy_dedup(
         out_dir,
         schema,
         lambda batch: minhash_band_buckets(minhash_signatures(batch)),
+        BandIndex(spark, f"{out_dir}/band_index", n_pfx),
         id_col="doc_id",
         max_files_per_trigger=max_files_per_trigger,
-        n_pfx=n_pfx,
         max_bucket_size=max_bucket_size,
         compact_every=compact_every,
     )
@@ -230,54 +122,37 @@ def stream_semantic_dedup(
     (:func:`_stream_banded_dedup`) — only the banding function and id
     column differ.
 
-    Band parameters are PINNED for the stream's life and recorded in
-    a ``_band_params`` sidecar validated on every restart (the same
-    guard class as the core's ``_n_pfx`` modulus check): a stream has
-    no final corpus count to derive the adaptive width from, and
-    re-deriving per batch would band new batches into a DIFFERENT
-    bucket space than the accumulated index — silent candidate-pair
-    loss, exactly what ``similarity.write_embedding_band_index``'s
-    sidecar exists to prevent.  Defaults: ``bits=16`` (right-sized up
-    to ~2^12-vector corpora under the batch-side adaptive policy) and
-    the recall-targeted ``n_bands`` at ``threshold``
-    (``similarity.adaptive_band_count``).  When the accumulated
-    stream outgrows the pinned width the uniform pair term creeps
-    toward ~n_bands·|C|²/2^bits — the documented remedy is the same
-    as the batch index: stop, re-pin wider, rebuild from the
-    compacted layout (one banded scan), restart.
+    Band parameters are PINNED for the stream's life in the index's
+    ``_band_params`` sidecar, validated on every restart like the
+    ``n_pfx`` modulus (:class:`~vcfdbr_spark.operators.dedup.
+    BandIndex`): a stream has no final corpus count to derive the
+    adaptive width from, and re-deriving per batch would band new
+    batches into a DIFFERENT bucket space than the accumulated index
+    — silent candidate-pair loss.  Omitted parameters resume with the
+    recorded ones; a conflicting explicit one raises.  Defaults for a
+    new stream: ``bits=16`` (right-sized up to ~2^12-vector corpora
+    under the batch-side adaptive policy) and the recall-targeted
+    ``n_bands`` at ``threshold`` (``similarity.adaptive_band_count``).
+    When the accumulated stream outgrows the pinned width the uniform
+    pair term creeps toward ~n_bands·|C|²/2^bits — the documented
+    remedy is the same as the batch index: stop, re-pin wider,
+    rebuild from the compacted layout (one banded scan), restart.
     """
-    import json as _json
-
-    from vcfdbr_spark import fs as _fs
+    from vcfdbr_spark.operators.dedup import BandIndex
     from vcfdbr_spark.operators.similarity import (
         adaptive_band_count,
         embedding_band_index,
     )
 
-    sidecar = f"{out_dir}/band_index/_band_params"
-    raw = _fs.read_text(spark, sidecar)
-    if raw:
-        stored = _json.loads(raw)
-        if bits is None:
-            bits = stored["bits"]
-        if n_bands is None:
-            n_bands = stored["n_bands"]
-        if (bits, n_bands) != (stored["bits"], stored["n_bands"]):
-            raise ValueError(
-                f"stream index at {out_dir}/band_index is pinned at "
-                f"bits={stored['bits']}, n_bands={stored['n_bands']}; "
-                f"restarting with ({bits}, {n_bands}) would band new "
-                f"batches into a different bucket space and silently "
-                f"lose candidate pairs"
-            )
-    else:
-        if bits is None:
-            bits = DEFAULT_STREAM_BAND_BITS
-        if n_bands is None:
-            n_bands = adaptive_band_count(bits, threshold)
-        _fs.write_text(
-            spark, sidecar, _json.dumps({"bits": bits, "n_bands": n_bands})
-        )
+    index = BandIndex(
+        spark, f"{out_dir}/band_index", n_pfx,
+        params={"bits": bits, "n_bands": n_bands},
+    )
+    pinned = index.params
+    if pinned["bits"] is None:
+        pinned["bits"] = DEFAULT_STREAM_BAND_BITS
+    if pinned["n_bands"] is None:
+        pinned["n_bands"] = adaptive_band_count(pinned["bits"], threshold)
 
     _stream_banded_dedup(
         spark,
@@ -285,11 +160,12 @@ def stream_semantic_dedup(
         out_dir,
         schema,
         lambda batch: embedding_band_index(
-            batch, threshold=threshold, bits=bits, n_bands=n_bands
+            batch, threshold=threshold, bits=pinned["bits"],
+            n_bands=pinned["n_bands"],
         ),
+        index,
         id_col="vec_id",
         max_files_per_trigger=max_files_per_trigger,
-        n_pfx=n_pfx,
         max_bucket_size=max_bucket_size,
         compact_every=compact_every,
     )
@@ -311,91 +187,51 @@ def stream_exact_dedup(
     ``(doc_id, keep_id)`` row per doc — ``keep_id`` is the FIRST doc
     ever seen with that text (first-seen-wins, stable once assigned).
 
-    Why not :func:`stream_dedup`: watermark state is BOUNDED by
-    design — a duplicate arriving after the watermark passes its
-    original is NOT caught.  Why not the banded core: exact dedup
-    over pairs is the wrong shape at scale (B identical boilerplate
-    docs would emit B² pairs); the right state is ONE row per
-    DISTINCT hash, so the index is corpus-vocabulary-sized and a
+    Why not Spark's ``dropDuplicatesWithinWatermark``: watermark state
+    is BOUNDED by design — a duplicate arriving after the watermark
+    passes its original is NOT caught.  Why not the banded core: exact
+    dedup over pairs is the wrong shape at scale (B identical
+    boilerplate docs would emit B² pairs); the right state is ONE row
+    per DISTINCT hash, so the index is corpus-vocabulary-sized and a
     boilerplate cluster of any size costs one probe row.
 
-    The index reuses the ``dedup.write_band_index`` pfx-prunable
-    layout (``bucket`` = md5(text), ``doc_id`` = keeper, band 0):
-    each probe pushes its batch's hash prefixes as PartitionFilters
-    and reads only the matching ``pfx=`` dirs — per-batch cost is
-    O(|batch| + pruned probe), independent of stream age, and the
-    same auto-compaction (:func:`_compact_stream_index`) bounds
-    dir-listing growth.  Exactly-once: ``keep/batch=N`` and
-    ``batch=N`` index partitions are delete-before-write, the probe
-    excludes the batch's own partition, and a replayed batch
-    recomputes the identical keeper assignment (keepers are min-id
-    within the batch for unseen hashes, so the choice is
-    deterministic, not arrival-order-dependent within a batch).
+    The index is a :class:`~vcfdbr_spark.operators.dedup.BandIndex` at
+    ``hash_index`` (``bucket`` = md5(text), ``doc_id`` = keeper, band
+    0), with the same ``n_pfx`` restart guard and ``compact_every``
+    fold as :func:`stream_fuzzy_dedup`: each probe pushes its batch's
+    hash prefixes as PartitionFilters and reads only the matching
+    ``pfx=`` dirs — per-batch cost is O(|batch| + pruned probe),
+    independent of stream age.  Exactly-once: ``keep/batch=N`` and the
+    index's ``batch=N`` tail dir are delete-before-write, the probe
+    excludes the batch's own dir, and a replayed batch recomputes the
+    identical keeper assignment (keepers are min-id within the batch
+    for unseen hashes, so the choice is deterministic, not
+    arrival-order-dependent within a batch).
     """
     from vcfdbr_spark import fs as _fs
-    from vcfdbr_spark.operators.dedup import (
-        DEFAULT_N_PFX,
-        band_pfx,
-        index_n_pfx,
-        write_band_index,
-    )
+    from vcfdbr_spark.operators.dedup import BandIndex
 
-    idx_dir = f"{out_dir}/hash_index"
+    index = BandIndex(spark, f"{out_dir}/hash_index", n_pfx)
+    index.record()
     keep_dir = f"{out_dir}/keep"
-    comp_dir = f"{out_dir}/hash_index_compacted"
-    stored = index_n_pfx(spark, idx_dir)
-    if n_pfx is None:
-        n_pfx = stored if stored is not None else DEFAULT_N_PFX
-    elif stored is not None and stored != n_pfx:
-        raise ValueError(
-            f"stream hash index at {idx_dir} was built with "
-            f"n_pfx={stored}; restarting with n_pfx={n_pfx} would mix "
-            f"partition moduli"
-        )
-    if stored != n_pfx:
-        _fs.write_text(spark, f"{idx_dir}/_n_pfx", str(n_pfx))
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _fs.delete_dir(spark, f"{keep_dir}/batch={batch_id}")
-        _fs.delete_dir(spark, f"{idx_dir}/batch={batch_id}")
+        index.drop(batch_id)
         hashes = batch_df.select(
             "doc_id", F.md5(F.col(text_col)).alias("bucket")
         ).persist()
-        if not hashes.take(1):
+        pfxs = index.pfxs(hashes)
+        if not pfxs:
             hashes.unpersist()
             return
-        frames = []
-        for cand in (comp_dir, f"{comp_dir}.old"):
-            if _fs.exists(spark, cand):
-                frames.append(
-                    spark.read.parquet(cand).select(
-                        "doc_id", "bucket", "pfx"
-                    )
-                )
-                break
-        prior = [
-            d
-            for d in _fs.list_subdirs(spark, idx_dir, "batch=")
-            if not d.endswith(f"batch={batch_id}")
-        ]
-        if prior:
-            frames.append(
-                spark.read.option("basePath", idx_dir)
-                .parquet(*prior)
-                .select("doc_id", "bucket", "pfx")
-            )
-        if frames:
-            index = frames[0]
-            for f in frames[1:]:
-                index = index.unionByName(f)
-            pfxs = [
-                r[0]
-                for r in hashes.select(
-                    band_pfx(F.col("bucket"), n_pfx).alias("p")
-                ).distinct().collect()
-            ]
+        batch_min = hashes.groupBy("bucket").agg(
+            F.min("doc_id").alias("_bmin")
+        )
+        history = index.history(exclude_batch=batch_id)
+        if history is not None:
             known = (
-                index.filter(F.col("pfx").isin(pfxs))
+                history.filter(F.col("pfx").isin(pfxs))
                 .select(F.col("bucket"), F.col("doc_id").alias("_keeper"))
                 # a replayed batch's own folded rows can coexist with
                 # older true keepers in the compacted layout; min is
@@ -403,12 +239,6 @@ def stream_exact_dedup(
                 .groupBy("bucket")
                 .agg(F.min("_keeper").alias("_keeper"))
             )
-        else:
-            known = None
-        batch_min = hashes.groupBy("bucket").agg(
-            F.min("doc_id").alias("_bmin")
-        )
-        if known is not None:
             resolved = batch_min.join(known, "bucket", "left").select(
                 "bucket",
                 F.coalesce(F.col("_keeper"), F.col("_bmin")).alias("keep_id"),
@@ -427,17 +257,13 @@ def stream_exact_dedup(
             F.lit(0).alias("band"),
             "bucket",
         )
+        # an all-seen batch adds no keepers: skip the write, since an
+        # empty batch=N dir breaks later history reads
         if fresh.take(1):
-            write_band_index(
-                fresh, f"{idx_dir}/batch={batch_id}", n_pfx=n_pfx,
-                mode="errorifexists",
-            )
+            index.append(fresh, batch_id)
         resolved.unpersist()
         hashes.unpersist()
-        if compact_every and len(
-            _fs.list_subdirs(spark, idx_dir, "batch=")
-        ) >= compact_every:
-            _compact_stream_index(spark, idx_dir, comp_dir, n_pfx)
+        index.fold(compact_every)
 
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
@@ -681,6 +507,7 @@ def stream_corpus_filter(
     """
     from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.dedup import (
+        BandIndex,
         dedup_components,
         minhash_band_buckets,
         minhash_signatures,
@@ -812,9 +639,9 @@ def stream_corpus_filter(
         out_dir,
         schema,
         make_bands,
+        BandIndex(spark, f"{out_dir}/band_index", n_pfx),
         id_col="doc_id",
         max_files_per_trigger=max_files_per_trigger,
-        n_pfx=n_pfx,
         max_bucket_size=max_bucket_size,
         compact_every=compact_every,
         post_batch=keep_hook,
@@ -827,9 +654,9 @@ def _stream_banded_dedup(
     out_dir: str,
     schema: str,
     make_bands,
+    index,
     id_col: str = "doc_id",
     max_files_per_trigger: int | None = None,
-    n_pfx: int | None = None,
     max_bucket_size: int | None = None,
     compact_every: int | None = 16,
     post_batch=None,
@@ -838,9 +665,10 @@ def _stream_banded_dedup(
     :func:`stream_fuzzy_dedup` (MinHash text bands) and
     :func:`stream_semantic_dedup` (sign-LSH embedding bands):
     ``make_bands(batch_df) → (id_col, band, bucket)`` is the only
-    modality-specific step; index layout, pfx pruning, exactly-once
-    replay semantics, hot-bucket caps and auto-compaction are
-    identical and tested once.
+    modality-specific step; the band ``index``
+    (:class:`~vcfdbr_spark.operators.dedup.BandIndex`, opened by the
+    caller), pfx pruning, exactly-once replay semantics, hot-bucket
+    caps and auto-compaction are identical and tested once.
 
     ``post_batch(batch_df, cross, inbatch, batch_id)``: optional
     per-batch hook (``stream_corpus_filter``'s keep policy) called
@@ -858,34 +686,15 @@ def _stream_banded_dedup(
     from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.dedup import (
         DEFAULT_MAX_BUCKET_SIZE,
-        DEFAULT_N_PFX,
-        band_pfx,
         band_probe_pairs,
-        index_n_pfx,
         lsh_candidate_pairs,
-        write_band_index,
     )
 
-    idx_dir = f"{out_dir}/band_index"
+    index.record()
     pairs_dir = f"{out_dir}/pairs"
-    # restart guard: the modulus is baked into every batch's pfx=
-    # layout, so a restart MUST reuse the recorded n_pfx — a different
-    # one would append mixed-modulus partitions and silently prune the
-    # wrong dirs on every later probe.  Omitted n_pfx resumes with the
-    # recorded value; an explicit conflicting one is a hard error.
-    stored = index_n_pfx(spark, idx_dir)
-    if n_pfx is None:
-        n_pfx = stored if stored is not None else DEFAULT_N_PFX
-    elif stored is not None and stored != n_pfx:
-        raise ValueError(
-            f"stream index at {idx_dir} was built with n_pfx={stored}; "
-            f"restarting with n_pfx={n_pfx} would mix partition moduli"
-        )
-    if stored != n_pfx:
-        _fs.write_text(spark, f"{idx_dir}/_n_pfx", str(n_pfx))
+    n_pfx = index.n_pfx
     if max_bucket_size is None:
         max_bucket_size = DEFAULT_MAX_BUCKET_SIZE
-    comp_dir = f"{out_dir}/band_index_compacted"
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # r14 tried an unconditional defaultParallelism repartition of
@@ -896,19 +705,8 @@ def _stream_banded_dedup(
         # full text is a scale cost, not a win — reverted (r15; large
         # source files range-split into scan tasks on their own)
         bands = make_bands(batch_df).persist()
-        # ONE job doubles as the batch-emptiness probe AND the probe's
-        # pfx collection (band_pfx of a NULL bucket is still non-null,
-        # so "no prefixes" ⇔ "no band rows" — the same truth value the
-        # old take(1) tested); the collect is bounded by n_pfx ints.
-        # Previously these were two separate per-batch jobs.
-        pfxs = [
-            r[0]
-            for r in bands.select(
-                band_pfx(F.col("bucket"), n_pfx).alias("p")
-            )
-            .distinct()
-            .collect()
-        ]
+        # one collect: the batch-emptiness probe AND the probe's pfx list
+        pfxs = index.pfxs(bands)
         if not pfxs:
             # A bandless batch (empty file, or every doc gated out by
             # a filtering make_bands) must write NO batch=N dirs: an
@@ -918,51 +716,17 @@ def _stream_banded_dedup(
             # exactly-once; the hook still runs (with None pair
             # frames) so its own per-batch output stays replay-clean.
             _fs.delete_dir(spark, f"{pairs_dir}/batch={batch_id}")
-            _fs.delete_dir(spark, f"{idx_dir}/batch={batch_id}")
+            index.drop(batch_id)
             if post_batch is not None:
                 post_batch(batch_df, None, None, batch_id)
             bands.unpersist()
             return
-        prior = [
-            d
-            for d in _fs.list_subdirs(spark, idx_dir, "batch=")
-            if not d.endswith(f"batch={batch_id}")
-        ]
-        frames = []
-        # compacted layout first (fall back to a half-swapped `.old`);
-        # a replayed batch whose rows were already folded in pairs
-        # against itself through it, which yields exactly the same
-        # distinct pair set as its own self-join — replays stay
-        # exactly-once in RESULT even across a compaction boundary
-        for cand in (comp_dir, f"{comp_dir}.old"):
-            if _fs.exists(spark, cand):
-                frames.append(
-                    spark.read.parquet(cand).select(
-                        id_col, "band", "bucket", "pfx"
-                    )
-                )
-                break
-        if prior:
-            # basePath anchors partition discovery at the index root,
-            # so the prior batch=N dirs surface both `batch` and the
-            # `pfx` column the probe prunes on (PartitionFilters on
-            # the scan); without it, multiple batch=* roots that each
-            # contain pfx=* children are rejected as conflicting
-            frames.append(
-                spark.read.option("basePath", idx_dir)
-                .parquet(*prior)
-                .select(id_col, "band", "bucket", "pfx")
-            )
+        history = index.history(exclude_batch=batch_id)
         cross = inbatch = None
-        if frames:
-            index = frames[0]
-            for f in frames[1:]:
-                # the probe's pfx isin-filter pushes through the union
-                # into PartitionFilters on BOTH scans
-                index = index.unionByName(f)
+        if history is not None:
             if post_batch is None:
                 pairs = band_probe_pairs(
-                    bands, index, id_col=id_col, n_pfx=n_pfx,
+                    bands, history, id_col=id_col, n_pfx=n_pfx,
                     max_bucket_size=max_bucket_size, pfxs=pfxs,
                 )
             else:
@@ -970,7 +734,7 @@ def _stream_banded_dedup(
                 # pairs separately; their union is the same distinct
                 # pair set the unsplit path writes
                 cross = band_probe_pairs(
-                    bands, index, id_col=id_col, n_pfx=n_pfx,
+                    bands, history, id_col=id_col, n_pfx=n_pfx,
                     max_bucket_size=max_bucket_size, self_pairs=False,
                     pfxs=pfxs,
                 ).persist()
@@ -986,25 +750,20 @@ def _stream_banded_dedup(
                 inbatch = inbatch.persist()
             pairs = inbatch
         _fs.delete_dir(spark, f"{pairs_dir}/batch={batch_id}")
-        _fs.delete_dir(spark, f"{idx_dir}/batch={batch_id}")
         # the pairs and index writes are INDEPENDENT jobs over the
         # already-materialized band cache — submit them concurrently
         # (guide §2.6) so one small job's tail/commit back-fills the
-        # other's; job descriptions are thread-local so UI attribution
-        # survives
+        # other's
         from concurrent.futures import ThreadPoolExecutor
 
         def _w_pairs():
             pairs.write.parquet(f"{pairs_dir}/batch={batch_id}")
 
-        def _w_index():
-            write_band_index(
-                bands, f"{idx_dir}/batch={batch_id}", n_pfx=n_pfx,
-                mode="errorifexists",
-            )
-
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(w) for w in (_w_pairs, _w_index)]
+            futs = [
+                pool.submit(_w_pairs),
+                pool.submit(index.append, bands, batch_id),
+            ]
             # wait for BOTH writes and report every failure: raising
             # only the first would hide a concurrent index-write error
             errs = [f.exception() for f in futs]
@@ -1022,12 +781,7 @@ def _stream_banded_dedup(
             if inbatch is not None:
                 inbatch.unpersist()
         bands.unpersist()
-        if compact_every and len(
-            _fs.list_subdirs(spark, idx_dir, "batch=")
-        ) >= compact_every:
-            _compact_stream_index(
-                spark, idx_dir, comp_dir, n_pfx, id_col=id_col
-            )
+        index.fold(compact_every)
 
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
@@ -1122,97 +876,6 @@ def stream_decontaminate(
         # restarting a failing stream must not accumulate eval indexes
         if eval_index_dir is None:
             eval_index.unpersist()
-
-
-def stream_sessions(
-    spark: SparkSession,
-    source_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-) -> DataFrame:
-    """Streaming gap-based sessionization via Spark's NATIVE session
-    windows: per (user, session-of-activity) aggregates where a
-    session extends while successive events arrive within ``gap`` —
-    the streaming twin of the batch ``events_sessions`` query (lag +
-    running-sum windows), but computed INCREMENTALLY: open sessions
-    live in state, merge when a new event's window overlaps, and are
-    finalized once the watermark passes their end.
-
-    State is bounded by (users with an open session) — the watermark
-    closes idle sessions, so a long-running stream never accumulates
-    history.  Boundary semantics: ``session_window`` ends are
-    exclusive (an event at exactly ``last_ts + gap`` starts a NEW
-    session), the half-open-interval rendering of the batch query's
-    ``gap > 1800`` rule.
-    """
-    stream = spark.readStream.schema(schema).format("parquet").load(source_dir)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(28,6)"))
-            .cast("double")
-            .alias("total"),
-        )
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "total",
-        )
-    )
-
-
-def stream_user_stats(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    running per-user event count / value total that survives across
-    micro-batches (arbitrary state Spark's built-in windowed aggs
-    can't express — e.g. this could carry ML feature state).
-
-    State schema is explicit (n, total); each micro-batch updates the
-    group's state from its Arrow batches and emits the running totals
-    (update semantics).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
-
-    out_schema = "user_id long, n long, total double"
-    state_schema = "n long, total double"
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n": [n], "total": [total]}
-        )
-
-    return (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def _finalize_stream_store(spark: SparkSession, out_dir: str, header) -> None:
