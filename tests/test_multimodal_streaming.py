@@ -719,8 +719,8 @@ def test_stream_vcf_ingest_auto_compaction(spark, tmp_path):
     # deleted rather than folded — bounded without a schemaless rewrite
     assert batch_dirs("_rejects") == ["ingest_batch=4"]
     # no swap debris
-    assert not os.path.exists(f"{out}/variant_info.compact-tmp")
-    assert not os.path.exists(f"{out}/variant_info.compact-old")
+    assert not os.path.exists(f"{out}/variant_info.tmp")
+    assert not os.path.exists(f"{out}/variant_info.old")
     # data integrity: 5 identical chunks x 6 variants, dense ids carry
     info = spark.read.parquet(f"{out}/variant_info")
     assert info.count() == 30
@@ -735,7 +735,7 @@ def test_stream_vcf_ingest_auto_compaction(spark, tmp_path):
 
     # crash-heal: simulate dying between the two swap renames (table
     # renamed away, tmp never promoted) — the next run heals it back
-    shutil.move(f"{out}/variant_info", f"{out}/variant_info.compact-old")
+    shutil.move(f"{out}/variant_info", f"{out}/variant_info.old")
     shutil.copy(src, str(vcf_dir / "chunk5.vcf"))
     stream_vcf_ingest(
         spark, str(vcf_dir), out, ckpt, header_path, compact_every=3

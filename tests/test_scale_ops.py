@@ -1,13 +1,10 @@
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
 from vcfdbr_spark.operators.sampling import deterministic_sample, stratified_sample
-from vcfdbr_spark.operators.skew import salted_join
-from vcfdbr_spark.operators.udf import apply_per_group
 from vcfdbr_spark.plans.bucketing import write_bucketed
 from vcfdbr_spark.plans.layout import formatted_plan
 
@@ -119,42 +116,19 @@ def test_sign_band_buckets_bound_candidates(spark):
     assert (7, 999) in pairs
 
 
-def test_salted_join_equals_plain_join(spark):
-    large = spark.range(0, 5_000).select(
-        # pathological skew: 80% of rows share one key
-        F.when(F.col("id") % 5 != 0, "HOT").otherwise(
-            F.concat(F.lit("k"), F.col("id"))
-        ).alias("symbol"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame(
-        [("HOT", 1), ("k0", 2), ("k5", 3), ("MISSING", 4)],
-        "symbol string, dim int",
-    )
-    got = salted_join(large, small, "symbol").orderBy("payload", "dim")
-    want = large.join(small, "symbol").orderBy("payload", "dim")
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-    # left join parity incl. unmatched rows
-    got_l = salted_join(large, small, "symbol", how="left").count()
-    want_l = large.join(small, "symbol", "left").count()
-    assert got_l == want_l
-
-
 def test_canonical_queries_on_skewed_gene_fixture(spark):
     """Reference-scale gene skew (benchmarks/01-filter-benchmark-
     genome.csv: the hottest gene carries 121,630 variants ≈ 10% of
     all impact rows).  Drive the canonical filter_test /
     pull_geno_test / per_gene_counts paths on a fixture with one
-    symbol = 10% of rows and pin the three skew defenses:
+    symbol = 10% of rows and pin the skew defenses:
 
     1. the single-symbol filtered side BROADCASTS, so the hot gene
        can never skew a shuffle (the big side doesn't move);
     2. per_gene_counts partial-aggregates map-side, so the hot
        symbol adds no reducer pressure;
-    3. for full-shuffle symbol-keyed joins the salted fallback
-       produces the plain-join result while spreading the hot key
-       across (symbol, _salt) reducers — and AQE skew-split stays
-       enabled for the 256 MB-partition regime tests can't reach.
+    3. AQE skew-split stays enabled for full-shuffle joins in the
+       256 MB-partition regime tests can't reach.
     """
     from vcfdbr_spark.operators.query import (
         filter_test,
@@ -195,42 +169,6 @@ def test_canonical_queries_on_skewed_gene_fixture(spark):
     assert "partial_count" in physical_plan(pgc)
 
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-
-    # salted fallback on the skewed symbol key, with broadcast off to
-    # force the full-shuffle regime salting exists for
-    genes = spark.createDataFrame(
-        [("HOTGENE", 1)] + [(f"G{i}", i + 2) for i in range(200)],
-        "symbol string, gene_rank int",
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        salted = salted_join(impact, genes, "symbol")
-        plain = impact.join(genes, "symbol")
-        assert salted.count() == plain.count() == n
-        splan = physical_plan(salted)
-        # the join's exchange keys include the salt: the hot symbol
-        # is spread across n_salt reducers instead of one
-        assert "hashpartitioning(symbol" in splan and "_salt" in splan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_apply_per_group(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("b", 10.0)], "g string, v double"
-    )
-
-    def span(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"g": [pdf["g"].iloc[0]], "span": [pdf["v"].max() - pdf["v"].min()]}
-        )
-
-    out = {
-        r["g"]: r["span"]
-        for r in apply_per_group(df, ["g"], span, "g string, span double").collect()
-    }
-    assert out == {"a": 2.0, "b": 0.0}
 
 
 def test_sampling_rates_and_determinism(spark):

@@ -350,6 +350,79 @@ def _shift_positions(src: str, dst: str, delta: int = 1_000_000) -> str:
     return dst
 
 
+@pytest.mark.parametrize("rewrite", ["compact_table", "reindex_ivf"])
+def test_rewrite_heals_a_crashed_swap(spark, tmp_path, rewrite):
+    """A crash between a swap's two renames leaves the rewritten dir
+    only at ``<dir>.old``, beside stale ``.tmp`` debris.  The next
+    rewrite heals it and equals an uncrashed run, with no ``.tmp`` or
+    ``.old`` dir left."""
+    import math
+    import os
+    import shutil
+
+    from vcfdbr_spark.operators.similarity import reindex_ivf, write_ivf_index
+    from vcfdbr_spark.sources.build import append_vcf, compact_table
+    from vcfdbr_spark.sources.store import write_vcfdb
+
+    def build(name: str) -> str:
+        out = str(tmp_path / name)
+        if rewrite == "compact_table":
+            vcf = write_vcf(str(tmp_path / f"{name}_a.vcf"))
+            write_vcfdb(read_vcf(spark, vcf), out, mode="table")
+            append_vcf(
+                spark, _shift_positions(vcf, str(tmp_path / f"{name}_b.vcf")), out
+            )
+            return f"{out}/variant_geno"
+        vecs = [
+            (i, [(1.0 if d // 2 == i % 4 else 0.0) + math.sin(i * 7.3 + d) * 0.05
+                 for d in range(8)])
+            for i in range(160)
+        ]
+        corpus = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+        write_ivf_index(corpus, out, nlist=4, n_iter=2)
+        return out
+
+    def run(path: str) -> list[str]:
+        if rewrite == "compact_table":
+            assert compact_table(spark, path.rsplit("/", 1)[0], "variant_geno") == 48
+        else:
+            reindex_ivf(spark, path)
+        return sorted(str(r) for r in spark.read.parquet(path).collect())
+
+    crashed, clean = build("crashed"), build("clean")
+    shutil.move(crashed, f"{crashed}.old")
+    os.makedirs(f"{crashed}.tmp")
+    open(f"{crashed}.tmp/part-00000.parquet", "w").write("half-written")
+
+    got = run(crashed)
+    assert len(got) == (48 if rewrite == "compact_table" else 160)
+    assert got == run(clean)
+    assert not os.path.exists(f"{crashed}.tmp")
+    assert not os.path.exists(f"{crashed}.old")
+
+
+def test_store_manifest_goes_through_hadoop_fs(spark, tmp_path, monkeypatch):
+    """A store addressed by a ``file://`` URI (the local stand-in for
+    ``hdfs://``) keeps its manifest in the store dir, not under a
+    ``file:`` dir below the driver's working dir, and opens and
+    compacts from any working dir."""
+    from vcfdbr_spark.sources.build import compact_table
+    from vcfdbr_spark.sources.store import open_vcfdb, write_vcfdb
+
+    vcf = write_vcf(str(tmp_path / "a.vcf"))
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = tmp_path / "db"
+    uri = f"file://{out}"
+    write_vcfdb(read_vcf(spark, vcf), uri, mode="table")
+    assert (out / "_vcfdb_manifest.json").is_file()
+    assert not (cwd / "file:").exists()
+    assert open_vcfdb(spark, uri).manifest["mode"] == "table"
+    assert compact_table(spark, uri, "variant_geno") == 24
+    assert open_vcfdb(spark, uri).pull([2]).count() == 4
+
+
 def test_vcfdb_handle_pins_schema_not_listing(spark, tmp_path):
     """A handle infers each table's schema once, so a second access
     submits no Spark job; it lists files on every access, so a handle

@@ -134,11 +134,73 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
 def rename(spark: SparkSession, src: str, dst: str) -> None:
     """Directory/file rename; raises on failure (Hadoop reports
     failure by returning false).  On HDFS a rename is atomic — the
-    building block for compaction swaps."""
+    building block of :func:`swap_dir`."""
     fs, p_src = _fs(spark, src)
     p_dst = spark._jvm.org.apache.hadoop.fs.Path(dst)
     if not fs.rename(p_src, p_dst):
         raise IOError(f"rename {src} -> {dst} failed")
+
+
+def heal_swap(spark: SparkSession, path: str) -> bool:
+    """Undo what a crash inside :func:`swap_dir` left at ``path``:
+    only ``<path>.old`` present → rename it back; then delete ``.old``
+    and ``.tmp`` debris.  Returns whether ``path`` exists after."""
+    path = path.rstrip("/")
+    old = f"{path}.old"
+    live = exists(spark, path)
+    if live:
+        delete_dir(spark, old)
+    elif exists(spark, old):
+        rename(spark, old, path)
+        live = True
+    delete_dir(spark, f"{path}.tmp")
+    return live
+
+
+def swapped_dir(spark: SparkSession, path: str) -> str | None:
+    """The directory a reader of swapped ``path`` should read:
+    ``path``, or ``<path>.old`` while a :func:`swap_dir` is half done,
+    or ``None`` when neither exists."""
+    path = path.rstrip("/")
+    for cand in (path, f"{path}.old"):
+        if exists(spark, cand):
+            return cand
+    return None
+
+
+def swap_dir(spark: SparkSession, path: str, write):
+    """Replace directory ``path`` with the one ``write(tmp)`` builds,
+    so no reader sees a half-written layout; returns what ``write``
+    returned.  The one rewrite-in-place protocol of the package (band
+    index folds, IVF reindex, store and stream-table compaction).
+
+    Steps: heal ``path`` (:func:`heal_swap`; first, because ``write``
+    may read ``path``), ``write(<path>.tmp)``, rename the live dir (if
+    any) to ``<path>.old``, rename ``.tmp`` to ``path``, delete
+    ``.old``.  A crash leaves one of three states, each healed by the
+    next :func:`heal_swap`:
+
+    - ``.tmp`` debris beside the untouched live dir (died in
+      ``write`` or before the first rename) → deleted;
+    - only ``.old`` (died between the renames) → renamed back.
+      Meanwhile ``path`` is absent: a plain read fails loudly, never
+      silently wrong, and :func:`swapped_dir` returns ``.old``;
+    - ``.old`` debris beside the new live dir → deleted.
+
+    Each rename is atomic on HDFS and the local filesystem.  Object
+    stores without atomic rename (S3A renames by copy-then-delete) do
+    not give this guarantee: a crash mid-rename can leave a partial
+    directory there."""
+    path = path.rstrip("/")
+    tmp, old = f"{path}.tmp", f"{path}.old"
+    live = heal_swap(spark, path)
+    out = write(tmp)
+    if live:
+        rename(spark, path, old)
+    rename(spark, tmp, path)
+    if live:
+        delete_dir(spark, old)
+    return out
 
 
 def read_text(spark: SparkSession, path: str) -> str | None:

@@ -835,14 +835,13 @@ class BandIndex:
 
     Layout: one :func:`write_band_index` tail dir per micro-batch at
     ``<root>/batch=N/pfx=M/``, plus at most one folded layout at
-    ``<root>_compacted``.  A fold writes ``<root>_compacted.tmp``,
-    renames the live layout to ``.old``, renames ``.tmp`` to live,
-    then deletes ``.old`` and the folded tail dirs.  Each rename is
-    atomic on HDFS, so a crash leaves one of: ``.tmp`` debris (deleted
-    by the next fold); only ``.old`` (read by :meth:`history`
-    meanwhile, renamed back by the next fold); or tail dirs that were
-    already folded (duplicate rows, harmless: probe output is distinct
-    and the next fold's ``distinct`` drops them).
+    ``<root>_compacted``.  A fold rewrites ``<root>_compacted`` by
+    :func:`vcfdbr_spark.fs.swap_dir` (its docstring states the crash
+    windows; :meth:`history` reads a half-swapped layout through
+    :func:`~vcfdbr_spark.fs.swapped_dir`), then deletes the folded
+    tail dirs.  A crash before those deletes leaves tail dirs that
+    were already folded: duplicate rows, harmless, because probe
+    output is distinct and the next fold's ``distinct`` drops them.
 
     Sidecars: ``<root>/_n_pfx`` records the partition modulus baked
     into every ``pfx=`` dir, and ``<root>/_band_params`` the optional
@@ -943,18 +942,17 @@ class BandIndex:
         """Every indexed row except batch ``exclude_batch``'s own, with
         its ``pfx`` column; ``None`` when nothing is indexed.
 
-        Reads the compacted layout (or ``.old`` when a fold died
-        between its renames) unioned with the tail.  A replayed batch
+        Reads the compacted layout (or its ``.old`` while a fold's
+        swap is half done) unioned with the tail.  A replayed batch
         whose rows were already folded pairs against itself through the
         compacted layout, which yields the same distinct pairs as its
         own self-join, so replays stay exactly-once across a fold.  A
         ``pfx`` ``isin`` filter on the result pushes through the union
         into PartitionFilters on every scan."""
         frames = []
-        for cand in (self.compacted, f"{self.compacted}.old"):
-            if _fs.exists(self.spark, cand):
-                frames.append(self.spark.read.parquet(cand))
-                break
+        comp = _fs.swapped_dir(self.spark, self.compacted)
+        if comp is not None:
+            frames.append(self.spark.read.parquet(comp))
         tail = self.tail(exclude_batch)
         if tail:
             frames.append(self._read_tail(tail))
@@ -991,27 +989,21 @@ class BandIndex:
 
     def fold(self, every: int | None) -> None:
         """Once the tail holds ``every`` dirs (``None`` never), fold it
-        and the compacted layout into a new compacted layout by the
-        swap described on the class."""
+        and the compacted layout into a new compacted layout."""
         if not every:
             return
         spark, comp = self.spark, self.compacted
         tail = self.tail()
         if len(tail) < every:
             return
-        old, tmp = f"{comp}.old", f"{comp}.tmp"
-        if not _fs.exists(spark, comp) and _fs.exists(spark, old):
-            _fs.rename(spark, old, comp)  # heal a half-finished swap
-        _fs.delete_dir(spark, old)
-        _fs.delete_dir(spark, tmp)
-        bands = self._read_tail(tail)
-        if _fs.exists(spark, comp):
-            bands = bands.unionByName(spark.read.parquet(comp))
-        self.write(bands.drop("pfx").distinct(), tmp)
-        if _fs.exists(spark, comp):
-            _fs.rename(spark, comp, old)
-        _fs.rename(spark, tmp, comp)
-        _fs.delete_dir(spark, old)
+
+        def write(tmp: str) -> None:
+            bands = self._read_tail(tail)
+            if _fs.exists(spark, comp):
+                bands = bands.unionByName(spark.read.parquet(comp))
+            self.write(bands.drop("pfx").distinct(), tmp)
+
+        _fs.swap_dir(spark, comp, write)
         for d in tail:
             _fs.delete_dir(spark, d)
 

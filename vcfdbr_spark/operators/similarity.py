@@ -693,17 +693,9 @@ def reindex_ivf(
     the whole layout under FRESH k-means centroids trained on the
     stored corpus itself.
 
-    Swap protocol (each rename atomic on HDFS — same class as the
-    stream index compaction; object stores without atomic rename,
-    e.g. S3A, do not give this guarantee for the whole swap): write
-    the re-trained layout to ``<path>__reindex_tmp`` → rename current
-    → ``__reindex_old`` → rename tmp → current → delete old.  A crash
-    between the renames leaves the old layout recoverable; the next
-    call heals it (renames ``__reindex_old`` back) before
-    re-indexing.  Readers never see a PARTIAL layout, but between the
-    two renames ``path`` does not exist — a concurrent read in that
-    window fails loudly (path not found) and should be retried, it is
-    never silently wrong.
+    The rewrite goes through :func:`vcfdbr_spark.fs.swap_dir`, whose
+    docstring states the crash windows: readers never see a partial
+    layout, and the next call heals a swap a crash left half done.
 
     ``nlist`` defaults to the stored centroid count (re-balance under
     the same list budget); pass a larger value when the corpus has
@@ -711,21 +703,16 @@ def reindex_ivf(
     """
     from vcfdbr_spark import fs as _fs
 
-    tmp, old = f"{path}__reindex_tmp", f"{path}__reindex_old"
-    if not _fs.exists(spark, path) and _fs.exists(spark, old):
-        _fs.rename(spark, old, path)  # heal a half-finished swap
-    if nlist is None:
-        nlist = read_ivf_centroids(spark, path, id_col=id_col).count()
-    corpus = spark.read.parquet(path).select(id_col, vec_col)
-    _fs.delete_dir(spark, tmp)
-    write_ivf_index(
-        corpus, tmp, nlist=nlist, n_iter=n_iter,
-        id_col=id_col, vec_col=vec_col, mode="overwrite",
-    )
-    _fs.delete_dir(spark, old)
-    _fs.rename(spark, path, old)
-    _fs.rename(spark, tmp, path)
-    _fs.delete_dir(spark, old)
+    def write(tmp: str) -> None:
+        n = nlist
+        if n is None:
+            n = read_ivf_centroids(spark, path, id_col=id_col).count()
+        write_ivf_index(
+            spark.read.parquet(path).select(id_col, vec_col), tmp,
+            nlist=n, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
+        )
+
+    _fs.swap_dir(spark, path, write)
     # Invalidate every cached plan rooted at the swapped path: callers
     # that persisted frames over the OLD layout (ivf_topk's amortized
     # centroid/assignment caches are the documented instance) would

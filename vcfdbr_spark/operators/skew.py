@@ -1,23 +1,14 @@
-"""Skew-resistant join: key salting.
+"""Input spreading for CPU-heavy per-row expansions (:func:`spread_scan`).
 
-AQE's skew-join splitting (enabled in session.py) handles most skew
-at runtime; salting is the explicit fallback for pathological keys
-(e.g. a gene symbol carrying 10% of all impact rows) or for engines/
-versions where the adaptive path doesn't trigger (broadcast-disabled
-full-shuffle joins).
-
-Shape: the skewed (large) side gets a deterministic salt in
-[0, n_salt) derived by hashing its entire row; the small side is
-replicated n_salt times.  Join on (key, salt) spreads each hot key
-over n_salt reducers.  Row-hash salting keeps the operator
-deterministic (no rand()) — re-executions land rows on the same
-reducers.
+Skewed join keys need no operator here: AQE's skew-join splitting
+(enabled in session.py) splits hot partitions at runtime, and the
+canonical gene queries are skew-proof by plan shape (the filtered
+side broadcasts; per-gene counts partial-aggregate map-side).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 #: a scan whose total input is below this many bytes PER CORE would
@@ -86,33 +77,3 @@ def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         return df
     return df.repartition(target)
 
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: list[str] | str,
-    n_salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join ``large ⋈ small`` on ``on`` with the large side
-    salted ``n_salt`` ways.  Result equals the plain join (tested)
-    for ``inner`` and ``left`` only: the small side is replicated
-    ``n_salt`` times, so right/full-outer (and right-semi/anti) would
-    emit each unmatched small-side row once per salt — those modes
-    are rejected rather than silently wrong.  Keep the small side the
-    dimension side."""
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got {how!r}: "
-            "the replicated small side would duplicate unmatched rows "
-            "in right/full/semi/anti modes"
-        )
-    keys = [on] if isinstance(on, str) else list(on)
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in large.columns]), F.lit(n_salt)
-    ).cast("int")
-    left = large.withColumn("_salt", salt)
-    right = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    )
-    return left.join(right, keys + ["_salt"], how).drop("_salt")

@@ -32,9 +32,10 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from vcfdbr_spark import fs as _fs
 from vcfdbr_spark.operators.ids import with_dense_ids
 from vcfdbr_spark.schema import read_header
-from vcfdbr_spark.sources.store import write_vcfdb
+from vcfdbr_spark.sources.store import read_manifest, write_vcfdb
 from vcfdbr_spark.sources.vcf import (
     VcfTables,
     _probe_format_fields,
@@ -52,8 +53,6 @@ def _progress_path(out_path: str) -> str:
 def _load_progress(spark: SparkSession, out_path: str) -> dict:
     # Hadoop FS, not local open(): the progress manifest lives next
     # to the (possibly hdfs://-s3a://) store output
-    from vcfdbr_spark import fs as _fs
-
     raw = _fs.read_text(spark, _progress_path(out_path))
     if raw is None:
         return {"chunks": {}, "next_id": 1, "tables_done": False}
@@ -61,16 +60,7 @@ def _load_progress(spark: SparkSession, out_path: str) -> dict:
 
 
 def _save_progress(spark: SparkSession, out_path: str, prog: dict) -> None:
-    from vcfdbr_spark import fs as _fs
-
     _fs.write_text(spark, _progress_path(out_path), json.dumps(prog))
-
-
-def _delete_dir(spark: SparkSession, path: str) -> None:
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
 
 
 def _contig_groups(contigs: list[str], n_chunks: int) -> list[list[str]]:
@@ -154,8 +144,8 @@ def build_vcfdb_resumable(
         is_malformed = F.col("start").isNull()
         # idempotency: delete any partial output of THIS chunk before
         # writing (and before counting, so the id carry stays exact)
-        _delete_dir(spark, f"{staging}/chunk={k}")
-        _delete_dir(spark, f"{rejects_dir}/chunk={k}")
+        _fs.delete_dir(spark, f"{staging}/chunk={k}")
+        _fs.delete_dir(spark, f"{rejects_dir}/chunk={k}")
         (
             parsed.filter(is_multi | is_malformed)
             .select(
@@ -410,13 +400,12 @@ def compact_table(
     ``vbucket=`` hive partitioning, compacting to one sorted file per
     bucket so the partition-pruned pull contract survives.
 
-    Staged for safety: the compacted copy lands in a sibling ``.tmp``
-    directory first, and the swap is two renames — a crash leaves
-    either the original or the finished copy, never a half-written
-    table.  Returns the row count.
+    The rewrite goes through :func:`vcfdbr_spark.fs.swap_dir`: a
+    crash leaves the original or the finished copy, never a
+    half-written table, and the next call heals a swap a crash left
+    half done.  Returns the row count.
     """
-    with open(f"{store_path}/_vcfdb_manifest.json") as fh:
-        manifest = json.load(fh)
+    manifest = read_manifest(spark, store_path)
     if manifest.get("bucketed") and table in ("variant_info", "variant_geno"):
         raise ValueError(
             f"compact_table refuses {table} on a bucketed store: a "
@@ -425,30 +414,24 @@ def compact_table(
         )
     sort_cols = sort_cols or _COMPACT_SORTS[table]
     table_path = f"{store_path}/{table}"
-    df = spark.read.parquet(table_path)
-    n = df.count()
-    tmp = table_path.rstrip("/") + ".compact-tmp"
-    old = table_path.rstrip("/") + ".compact-old"
-    _delete_dir(spark, tmp)
-    _delete_dir(spark, old)
-    if manifest["mode"] == "file" and table == "variant_geno":
-        (
-            df.repartition("vbucket")
-            .sortWithinPartitions(*sort_cols)
-            .write.partitionBy("vbucket")
-            .parquet(tmp)
-        )
-    else:
-        range_args = [n_partitions] if n_partitions else []
-        (
-            df.repartitionByRange(*range_args, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-            .write.parquet(tmp)
-        )
-    jvm = spark._jvm
-    fs_path = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.rename(fs_path, jvm.org.apache.hadoop.fs.Path(old))
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), fs_path)
-    _delete_dir(spark, old)
-    return int(n)
+
+    def write(tmp: str) -> int:
+        df = spark.read.parquet(table_path)
+        n = df.count()
+        if manifest["mode"] == "file" and table == "variant_geno":
+            (
+                df.repartition("vbucket")
+                .sortWithinPartitions(*sort_cols)
+                .write.partitionBy("vbucket")
+                .parquet(tmp)
+            )
+        else:
+            range_args = [n_partitions] if n_partitions else []
+            (
+                df.repartitionByRange(*range_args, *sort_cols)
+                .sortWithinPartitions(*sort_cols)
+                .write.parquet(tmp)
+            )
+        return int(n)
+
+    return _fs.swap_dir(spark, table_path, write)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from vcfdbr_spark import fs as _fs
 from vcfdbr_spark.sources.vcf import VcfTables
 
 GENE_MAP_COLS = [
@@ -58,6 +59,25 @@ def build_gene_map(variant_impact: DataFrame) -> DataFrame:
     # re-distinct to keep the set semantics of the reference (which
     # normalizes before writing the distinct frame).
     return out.distinct()
+
+
+def _manifest_path(path: str) -> str:
+    return f"{path}/_vcfdb_manifest.json"
+
+
+def read_manifest(spark: SparkSession, path: str) -> dict:
+    """The store manifest at ``path``, read through the Hadoop FS (the
+    store may live on ``hdfs://``/``s3a://``); raises
+    ``FileNotFoundError`` when ``path`` holds no store."""
+    raw = _fs.read_text(spark, _manifest_path(path))
+    if raw is None:
+        raise FileNotFoundError(f"no store manifest at {_manifest_path(path)}")
+    return json.loads(raw)
+
+
+def write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
+    """Write the store manifest at ``path`` through the Hadoop FS."""
+    _fs.write_text(spark, _manifest_path(path), json.dumps(manifest))
 
 
 def _catalog_base(path: str) -> str:
@@ -207,9 +227,7 @@ def write_vcfdb(
         "bucketed": bool(bucketed),
         "n_buckets": n_buckets if bucketed else None,
     }
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/_vcfdb_manifest.json", "w") as fh:
-        json.dump(manifest, fh)
+    write_manifest(info.sparkSession, path, manifest)
 
 
 class VcfDb:
@@ -230,8 +248,7 @@ class VcfDb:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(f"{path}/_vcfdb_manifest.json") as fh:
-            self.manifest = json.load(fh)
+        self.manifest = read_manifest(spark, path)
         self._schemas: dict[str, StructType] = {}
 
     def table(self, name: str) -> DataFrame:

@@ -885,9 +885,7 @@ def _finalize_stream_store(spark: SparkSession, out_dir: str, header) -> None:
     store exactly like a batch-built one (``open_vcfdb`` → filter /
     pull / sql).  Idempotent: re-runs after each stream drain rewrite
     only the small dimension tables."""
-    import json
-
-    from vcfdbr_spark.sources.store import build_gene_map
+    from vcfdbr_spark.sources.store import build_gene_map, write_manifest
     from vcfdbr_spark.sources.vcf import build_metadata
 
     samples, metadata = build_metadata(spark, header)
@@ -904,7 +902,7 @@ def _finalize_stream_store(spark: SparkSession, out_dir: str, header) -> None:
         build_gene_map(impact).coalesce(1).write.mode("overwrite").parquet(
             f"{out_dir}/gene_map"
         )
-    manifest = {
+    write_manifest(spark, out_dir, {
         "mode": "table",
         "geno_bucket_width": None,
         "sections": sorted(metadata),
@@ -912,12 +910,7 @@ def _finalize_stream_store(spark: SparkSession, out_dir: str, header) -> None:
         "bucketed": False,
         "n_buckets": None,
         "streamed": True,
-    }
-    from vcfdbr_spark import fs as _fs
-
-    _fs.write_text(
-        spark, f"{out_dir}/_vcfdb_manifest.json", json.dumps(manifest)
-    )
+    })
 
 
 _STREAM_TABLES = ("variant_info", "variant_impact", "variant_geno", "_rejects")
@@ -930,19 +923,6 @@ _STREAM_COMPACT_SORTS = {
     "variant_impact": ["symbol", "variant_id"],
     "variant_geno": ["variant_id", "sample"],
 }
-
-
-def _heal_stream_table(spark: SparkSession, table_path: str) -> None:
-    """Recover from a compaction-swap crash window: only
-    ``.compact-old`` present → rename it back; a finished swap that
-    died before cleanup → drop the leftovers."""
-    from vcfdbr_spark import fs as _fs
-
-    old, tmp = f"{table_path}.compact-old", f"{table_path}.compact-tmp"
-    if _fs.exists(spark, old) and not _fs.exists(spark, table_path):
-        _fs.rename(spark, old, table_path)
-    _fs.delete_dir(spark, old)
-    _fs.delete_dir(spark, tmp)
 
 
 def _compact_stream_table(
@@ -959,21 +939,16 @@ def _compact_stream_table(
     them.  Batches below the current id have committed (micro-batches
     run in order) and can never replay, so folding them is safe.
 
-    Swap is whole-table and atomic (the :func:`compact_table`
-    protocol): the complete new layout — folded ``-1`` partition plus
-    the current batch's dir — is built in a ``.compact-tmp`` sibling,
-    then table → ``.compact-old``, tmp → table.  A crash leaves
-    either the original or the finished copy, never dup/missing rows;
-    :func:`_heal_stream_table` recovers the half-swapped window.
-    Cost is O(table) per compaction (same model as the band-index
-    fold); ``compact_every`` amortizes it — raise it for very long
-    streams.
+    The swap is whole-table, by :func:`vcfdbr_spark.fs.swap_dir`: the
+    complete new layout — folded ``-1`` partition plus the current
+    batch's dir — replaces the table, so a crash leaves the original
+    or the finished copy, never dup/missing rows; the stream heals a
+    half-done swap at its next start.  Cost is O(table) per
+    compaction (same model as the band-index fold); ``compact_every``
+    amortizes it — raise it for very long streams.
     """
     from vcfdbr_spark import fs as _fs
 
-    _heal_stream_table(spark, table_path)
-    if not _fs.exists(spark, table_path):
-        return
     tail = [
         d
         for d in _fs.list_subdirs(spark, table_path, "ingest_batch=")
@@ -981,7 +956,6 @@ def _compact_stream_table(
     ]
     if not tail:
         return
-    old, tmp = f"{table_path}.compact-old", f"{table_path}.compact-tmp"
     table = table_path.rstrip("/").rsplit("/", 1)[-1]
     # Zero-row batches (the common _rejects case) write schema-only
     # (or no) part files.  Two husk traps: a table with NO data files
@@ -1016,10 +990,10 @@ def _compact_stream_table(
         folded = folded.repartitionByRange(*sort_cols).sortWithinPartitions(
             *sort_cols
         )
-    folded.write.partitionBy("ingest_batch").parquet(tmp)
-    _fs.rename(spark, table_path, old)
-    _fs.rename(spark, tmp, table_path)
-    _fs.delete_dir(spark, old)
+    _fs.swap_dir(
+        spark, table_path,
+        lambda tmp: folded.write.partitionBy("ingest_batch").parquet(tmp),
+    )
 
 
 def stream_vcf_ingest(
@@ -1074,7 +1048,6 @@ def stream_vcf_ingest(
 
     from vcfdbr_spark.operators.ids import with_dense_ids
     from vcfdbr_spark.schema import read_header
-    from vcfdbr_spark.sources.build import _delete_dir
     from vcfdbr_spark.sources.vcf import (
         contig_rank_expr,
         derive_tables,
@@ -1096,8 +1069,11 @@ def stream_vcf_ingest(
     progress_path = f"{out_dir}/_stream_progress.json"
 
     # heal any compaction swap the previous run crashed inside of
+    # before a batch writes: a batch would otherwise recreate a table
+    # dir that is only at its .old, and the next heal would then
+    # delete .old, the table's history
     for _t_name in _STREAM_TABLES:
-        _heal_stream_table(spark, f"{out_dir}/{_t_name}")
+        _fs.heal_swap(spark, f"{out_dir}/{_t_name}")
 
     def _load_progress() -> dict:
         raw = _fs.read_text(spark, progress_path)
@@ -1122,7 +1098,7 @@ def stream_vcf_ingest(
         start = int(prog["batches"].get(key, {}).get("id_start", prog["next_id"]))
         tables = ("variant_info", "variant_impact", "variant_geno", "_rejects")
         for t in tables:
-            _delete_dir(spark_l, f"{out_dir}/{t}/ingest_batch={batch_id}")
+            _fs.delete_dir(spark_l, f"{out_dir}/{t}/ingest_batch={batch_id}")
 
         parsed = parse_lines(batch_df.select("value"), header)
         is_multi = F.col("alt").contains(",")
