@@ -266,39 +266,25 @@ def main() -> None:
         impact_df = simdata.sim_impact(orders, li, keyed=keyed).persist()
         geno_df = simdata.sim_geno(orders, li, keyed=keyed).persist()
 
-        def _w_info():
-            (
-                simdata.sim_info(orders, keyed=keyed)
-                .repartitionByRange(8, "variant_id")
-                .sortWithinPartitions("variant_id")
-                .write.mode("overwrite")
-                .parquet(f"{store}/variant_info")
-            )
-
-        def _w_impact():
-            (
-                impact_df
-                .repartitionByRange(8, "symbol", "variant_id")
-                .sortWithinPartitions("symbol", "variant_id")
-                .write.mode("overwrite")
-                .parquet(f"{store}/variant_impact")
-            )
-
-        def _w_geno():
-            (
-                geno_df
-                .repartitionByRange(8, "variant_id", "sample")
-                .sortWithinPartitions("variant_id", "sample")
-                .write.mode("overwrite")
-                .parquet(f"{store}/variant_geno")
-            )
-
         # independent jobs over the shared persisted key frame —
-        # submit concurrently (same strategy as write_vcfdb)
+        # submit concurrently (same strategy as write_vcfdb), each in
+        # the store's table-mode layout
         from concurrent.futures import ThreadPoolExecutor
 
+        from vcfdbr_spark.sources.store import write_table
+
+        frames = {
+            "variant_info": simdata.sim_info(orders, keyed=keyed),
+            "variant_impact": impact_df,
+            "variant_geno": geno_df,
+        }
         with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [pool.submit(w) for w in (_w_info, _w_impact, _w_geno)]:
+            for f in [
+                pool.submit(
+                    write_table, df, store, t, {"mode": "table"}, n_partitions=8
+                )
+                for t, df in frames.items()
+            ]:
                 f.result()
         keyed.unpersist()
         impact_df.unpersist()

@@ -9,7 +9,7 @@ def test_dense_ids_basic(spark):
     df = spark.range(0, 1000).select(
         (F.col("id") % 7).alias("chr"), (999 - F.col("id")).alias("pos")
     )
-    out = with_dense_ids(df, ["chr", "pos"], num_partitions=6)
+    out = with_dense_ids(df, ["chr", "pos"])
     rows = out.orderBy("variant_id").collect()
     assert [r["variant_id"] for r in rows] == list(range(1, 1001))
     # ids must follow (chr, pos) sort order exactly
@@ -19,7 +19,7 @@ def test_dense_ids_basic(spark):
 
 def test_dense_ids_density_invariant(spark):
     df = spark.range(0, 12345).select(F.col("id").alias("pos"))
-    out = with_dense_ids(df, ["pos"], num_partitions=10)
+    out = with_dense_ids(df, ["pos"])
     agg = out.agg(
         F.max("variant_id").alias("mx"),
         F.count("*").alias("n"),
@@ -30,6 +30,6 @@ def test_dense_ids_density_invariant(spark):
 
 def test_dense_ids_custom_start(spark):
     df = spark.range(0, 10).select(F.col("id").alias("pos"))
-    out = with_dense_ids(df, ["pos"], start=101, num_partitions=3)
+    out = with_dense_ids(df, ["pos"], start=101)
     ids = [r["variant_id"] for r in out.orderBy("variant_id").collect()]
     assert ids == list(range(101, 111))

@@ -745,6 +745,47 @@ def test_stream_vcf_ingest_auto_compaction(spark, tmp_path):
     assert info.select("variant_id").distinct().count() == 36
 
 
+def test_compact_table_keeps_streamed_batches(spark, tmp_path):
+    """``compact_table`` on a streamed store folds every
+    ``ingest_batch=N`` dir into the stream's own ``ingest_batch=-1``
+    history partition, so a batch streamed afterwards lands beside it
+    and reads see all rows (a plain-file rewrite left partition
+    discovery reading only the new batch dir)."""
+    import glob
+    import os
+    import shutil
+
+    from vcfdbr_spark.sources.build import compact_table
+    from vcfdbr_spark.sources.store import open_vcfdb
+
+    vcf_dir = tmp_path / "vcf_in"
+    vcf_dir.mkdir()
+    header_path = write_vcf(str(tmp_path / "header.vcf"))
+    out = str(tmp_path / "db")
+    ckpt = str(tmp_path / "ckpt")
+    src = write_vcf(str(tmp_path / "chunk.vcf"))
+
+    def stream(k):  # one drain per file -> batch id k
+        shutil.copy(src, str(vcf_dir / f"chunk{k}.vcf"))
+        stream_vcf_ingest(
+            spark, str(vcf_dir), out, ckpt, header_path, compact_every=None
+        )
+
+    stream(0)
+    stream(1)
+    assert compact_table(spark, out, "variant_info") == 12
+    stream(2)
+
+    assert sorted(
+        os.path.basename(d) for d in glob.glob(f"{out}/variant_info/*")
+        if not os.path.basename(d).startswith(("_", "."))
+    ) == ["ingest_batch=-1", "ingest_batch=2"]
+    info = open_vcfdb(spark, out).variant_info
+    assert info.count() == 18
+    assert info.select("variant_id").distinct().count() == 18
+    assert info.agg(F.max("variant_id")).first()[0] == 18
+
+
 def test_stream_fuzzy_dedup_file_scheme_out_dir(spark, tmp_path):
     """Side-state goes through the Hadoop FS: an explicitly
     scheme-qualified ``file://`` out_dir (the local stand-in for

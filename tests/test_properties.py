@@ -62,7 +62,7 @@ def test_gt2snp_matches_python_oracle(spark, gts):
 )
 def test_dense_ids_always_dense_and_ordered(spark, rows):
     df = spark.createDataFrame(rows, "chr int, pos int")
-    out = with_dense_ids(df, ["chr", "pos"], num_partitions=4).collect()
+    out = with_dense_ids(df, ["chr", "pos"]).collect()
     ids = sorted(r["variant_id"] for r in out)
     assert ids == list(range(1, len(rows) + 1))
     by_id = sorted(out, key=lambda r: r["variant_id"])

@@ -498,7 +498,7 @@ def test_append_vcf_file_mode_routes_vbuckets(spark, tmp_path):
 
 def test_append_vcf_schema_guards(spark, tmp_path):
     """Drifted INFO headers must raise, not append mixed-schema
-    parquet; bucketed stores must be refused outright."""
+    parquet; bucketed and streamed stores must be refused outright."""
     import pytest
 
     from vcfdbr_spark.sources.build import append_vcf, compact_table
@@ -525,3 +525,19 @@ def test_append_vcf_schema_guards(spark, tmp_path):
         append_vcf(spark, vcf2, bucketed_out)
     with pytest.raises(ValueError, match="bucketed"):
         compact_table(spark, bucketed_out, "variant_geno")
+
+    # a streamed store hands out ids from its progress file: appending
+    # beside the stream would reuse them
+    import shutil
+
+    from vcfdbr_spark.streaming.ingest import stream_vcf_ingest
+
+    vcf_dir = tmp_path / "vcf_in"
+    vcf_dir.mkdir()
+    shutil.copy(vcf1, str(vcf_dir / "chunk0.vcf"))
+    streamed_out = str(tmp_path / "dbs")
+    stream_vcf_ingest(
+        spark, str(vcf_dir), streamed_out, str(tmp_path / "ckpt"), vcf1
+    )
+    with pytest.raises(ValueError, match="streamed store.*stream's input dir"):
+        append_vcf(spark, vcf2, streamed_out)

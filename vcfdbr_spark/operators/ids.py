@@ -42,7 +42,6 @@ def with_dense_ids(
     id_col: str = "variant_id",
     start: int = 1,
     bucket: Column | list[str] | None = None,
-    num_partitions: int | None = None,  # kept for API compat; unused
 ) -> DataFrame:
     """Assign a dense sequential ``id_col`` (start..start+N-1) ordered
     by ``order_cols``.

@@ -33,16 +33,23 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from vcfdbr_spark import fs as _fs
-from vcfdbr_spark.operators.ids import with_dense_ids
 from vcfdbr_spark.schema import read_header
-from vcfdbr_spark.sources.store import read_manifest, write_vcfdb
+from vcfdbr_spark.sources.store import (
+    TABLE_SORTS,
+    open_vcfdb,
+    read_manifest,
+    write_table,
+    write_tables,
+    write_vcfdb,
+)
 from vcfdbr_spark.sources.vcf import (
     VcfTables,
     _probe_format_fields,
     build_metadata,
-    contig_rank_expr,
     derive_tables,
     parse_records,
+    read_vcf,
+    split_rejects_and_id,
 )
 
 
@@ -140,36 +147,14 @@ def build_vcfdb_resumable(
             if k == len(groups) - 1:
                 in_group = in_group | ~F.col("chr").isin(header.contigs)
             parsed = parsed.filter(in_group)
-        is_multi = F.col("alt").contains(",")
-        is_malformed = F.col("start").isNull()
+        rejects, keyed = split_rejects_and_id(
+            parsed, header, id_start=int(prog["next_id"])
+        )
         # idempotency: delete any partial output of THIS chunk before
         # writing (and before counting, so the id carry stays exact)
         _fs.delete_dir(spark, f"{staging}/chunk={k}")
         _fs.delete_dir(spark, f"{rejects_dir}/chunk={k}")
-        (
-            parsed.filter(is_multi | is_malformed)
-            .select(
-                "chr", "start", "ref", "alt",
-                F.when(is_multi, "multiallelic")
-                .otherwise("malformed")
-                .alias("reason"),
-            )
-            .write.parquet(f"{rejects_dir}/chunk={k}")
-        )
-        ok = (
-            parsed.filter(~is_multi & ~is_malformed)
-            .withColumn("_crank", contig_rank_expr(header))
-        )
-        keyed = with_dense_ids(
-            ok,
-            ["_crank", "chr", "start", "ref", "alt"],
-            id_col="variant_id",
-            start=int(prog["next_id"]),
-            bucket=F.struct(
-                F.col("_crank"), F.col("chr"),
-                F.floor(F.col("start") / 1_000_000),
-            ),
-        ).drop("_crank")
+        rejects.write.parquet(f"{rejects_dir}/chunk={k}")
         keyed.write.parquet(f"{staging}/chunk={k}")
         n = spark.read.parquet(f"{staging}/chunk={k}").count()
         prog["chunks"][key] = {
@@ -249,11 +234,12 @@ def append_vcf(
     keeps working; in file mode new genotype rows route into their
     ``vbucket=`` hive partitions (and variant_info gets the matching
     geno path column), so the O(buckets) partition-pruned pull spans
-    old and new ingests alike.  ``gene_map`` is rebuilt from the full
-    impact table.  Ids stay dense overall but position-sorted only
-    within each ingest (append order = arrival order, like the
-    reference's chunk-order semantics).  Returns the number of
-    appended variants.
+    old and new ingests alike.  The tables are written concurrently,
+    by the same writer as :func:`write_vcfdb`; ``gene_map`` is then
+    rebuilt from the full impact table.  Ids stay dense overall but
+    position-sorted only within each ingest (append order = arrival
+    order, like the reference's chunk-order semantics).  Returns the
+    number of appended variants.
 
     Guards: the appended VCF must have the SAME sample cohort and the
     SAME derived table schemas (INFO/FORMAT header drift would append
@@ -262,11 +248,10 @@ def append_vcf(
     columns vanish and missing ones read as NULL with no error).
     Bucketed stores are rejected: appending around the catalog's
     bucket layout would silently break the zero-Exchange join
-    contract; compact to a plain layout first.
+    contract; compact to a plain layout first.  Streamed stores are
+    rejected: their ids come from the stream's progress file, which
+    would hand the appended ids out again.
     """
-    from vcfdbr_spark.sources.store import build_gene_map, open_vcfdb
-    from vcfdbr_spark.sources.vcf import read_vcf
-
     db = open_vcfdb(spark, store_path)
     if db.manifest.get("bucketed"):
         raise ValueError(
@@ -274,13 +259,13 @@ def append_vcf(
             "would not join the catalog bucket layout) — compact to a "
             "plain layout, append, then rewrite bucketed"
         )
-    mode = db.manifest["mode"]
-    # hoisted: both the variant_info geno-path column and the geno
-    # vbucket write key use it (binding it inside the first `if` left
-    # the later use working only by variable leakage)
-    width = (
-        int(db.manifest["geno_bucket_width"]) if mode == "file" else None
-    )
+    if db.manifest.get("streamed"):
+        raise ValueError(
+            f"append_vcf does not support the streamed store at "
+            f"{store_path}: its _stream_progress.json next_id would hand "
+            f"the appended ids out again — put the VCF into the stream's "
+            f"input dir (stream_vcf_ingest's vcf_dir) instead"
+        )
     start = (db.variant_info.agg(F.max("variant_id")).first()[0] or 0) + 1
     tables = read_vcf(
         spark, vcf_path, multi_value=multi_value,
@@ -291,18 +276,11 @@ def append_vcf(
         raise ValueError(
             "appended VCF has a different sample cohort than the store"
         )
+    # file mode's layout columns (variant_info.geno, variant_geno's
+    # vbucket) are stored but added only by write_table
+    layout_cols = ("geno", "vbucket") if db.manifest["mode"] == "file" else ()
 
-    info = tables.variant_info
-    if mode == "file":
-        info = info.withColumn(
-            "geno",
-            F.concat(
-                F.lit(f"{store_path}/variant_geno/vbucket="),
-                (F.col("variant_id") / width).cast("long").cast("string"),
-            ),
-        )
-
-    def _guard(name: str, new_df, ignore: tuple[str, ...] = ()) -> None:
+    def _guard(name: str, new_df) -> None:
         try:
             store_df = db.table(name)
         except Exception:
@@ -315,8 +293,8 @@ def append_vcf(
             )
         if store_df is None:
             return
-        want = _table_schema(store_df, ignore)
-        got = _table_schema(new_df, ignore)
+        want = _table_schema(store_df, layout_cols)
+        got = _table_schema(new_df, layout_cols)
         if want != got:
             drift = sorted(set(want).symmetric_difference(got))
             raise ValueError(
@@ -326,66 +304,25 @@ def append_vcf(
                 f"build a separate store"
             )
 
-    _guard("variant_info", info)
+    _guard("variant_info", tables.variant_info)
     _guard("variant_impact", tables.variant_impact)
-    # vbucket is the hive partition column, added at write time
-    _guard("variant_geno", tables.variant_geno, ignore=("vbucket",))
+    _guard("variant_geno", tables.variant_geno)
 
     # count once off the persisted parse — the id range is dense by
     # construction, so this IS the appended-row count (no post-write
     # re-read of the whole store's max id)
     n_new = tables.variant_info.count()
-    (
-        info.repartitionByRange("variant_id")
-        .sortWithinPartitions("variant_id")
-        .write.mode("append")
-        .parquet(f"{store_path}/variant_info")
+    write_tables(
+        tables, store_path, db.manifest, mode="append",
+        gene_map_from=lambda: db.variant_impact,
     )
-    if tables.variant_impact is not None:
-        (
-            tables.variant_impact.repartitionByRange("symbol", "variant_id")
-            .sortWithinPartitions("symbol", "variant_id")
-            .write.mode("append")
-            .parquet(f"{store_path}/variant_impact")
-        )
-        gm = build_gene_map(db.variant_impact)
-        gm.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/gene_map"
-        )
-    if tables.variant_geno is not None:
-        if mode == "file":
-            (
-                tables.variant_geno.withColumn(
-                    "vbucket", (F.col("variant_id") / width).cast("long")
-                )
-                .repartition("vbucket")
-                .sortWithinPartitions("variant_id", "sample")
-                .write.mode("append")
-                .partitionBy("vbucket")
-                .parquet(f"{store_path}/variant_geno")
-            )
-        else:
-            (
-                tables.variant_geno.repartitionByRange("variant_id", "sample")
-                .sortWithinPartitions("variant_id", "sample")
-                .write.mode("append")
-                .parquet(f"{store_path}/variant_geno")
-            )
     return int(n_new)
-
-
-_COMPACT_SORTS = {
-    "variant_info": ["variant_id"],
-    "variant_impact": ["symbol", "variant_id"],
-    "variant_geno": ["variant_id", "sample"],
-}
 
 
 def compact_table(
     spark: SparkSession,
     store_path: str,
     table: str = "variant_geno",
-    sort_cols: list[str] | None = None,
     n_partitions: int | None = None,
 ) -> int:
     """Rewrite a store table into ``n_partitions`` range-sorted files
@@ -393,12 +330,16 @@ def compact_table(
     files (each append writes its own sorted file set; row-group
     pruning still works but per-file overhead grows).
 
-    Manifest-aware: a bucketed store's variant_info/variant_geno are
+    Manifest-aware, through :func:`~vcfdbr_spark.sources.store.
+    write_table`: a bucketed store's variant_info/variant_geno are
     refused (a plain rewrite would destroy the catalog bucket layout
     behind the catalog's back — the zero-Exchange join would then
     return wrong bucket pruning); a file-mode variant_geno keeps its
     ``vbucket=`` hive partitioning, compacting to one sorted file per
-    bucket so the partition-pruned pull contract survives.
+    bucket so the partition-pruned pull contract survives; a streamed
+    store's ``ingest_batch=N`` dirs all fold into the stream's own
+    ``ingest_batch=-1`` history partition, so batches streamed later
+    still land beside it.
 
     The rewrite goes through :func:`vcfdbr_spark.fs.swap_dir`: a
     crash leaves the original or the finished copy, never a
@@ -406,32 +347,26 @@ def compact_table(
     half done.  Returns the row count.
     """
     manifest = read_manifest(spark, store_path)
+    if table not in TABLE_SORTS:
+        raise ValueError(
+            f"compact_table rewrites one of {sorted(TABLE_SORTS)}, not {table}"
+        )
     if manifest.get("bucketed") and table in ("variant_info", "variant_geno"):
         raise ValueError(
             f"compact_table refuses {table} on a bucketed store: a "
             f"plain rewrite would break the catalog bucket layout — "
             f"rewrite the store via write_vcfdb(bucketed=True) instead"
         )
-    sort_cols = sort_cols or _COMPACT_SORTS[table]
     table_path = f"{store_path}/{table}"
 
     def write(tmp: str) -> int:
         df = spark.read.parquet(table_path)
         n = df.count()
-        if manifest["mode"] == "file" and table == "variant_geno":
-            (
-                df.repartition("vbucket")
-                .sortWithinPartitions(*sort_cols)
-                .write.partitionBy("vbucket")
-                .parquet(tmp)
-            )
-        else:
-            range_args = [n_partitions] if n_partitions else []
-            (
-                df.repartitionByRange(*range_args, *sort_cols)
-                .sortWithinPartitions(*sort_cols)
-                .write.parquet(tmp)
-            )
+        if manifest.get("streamed"):
+            df = df.withColumn("ingest_batch", F.lit(-1))
+        write_table(
+            df, store_path, table, manifest, n_partitions=n_partitions, dest=tmp
+        )
         return int(n)
 
     return _fs.swap_dir(spark, table_path, write)

@@ -24,12 +24,14 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from vcfdbr_spark import fs as _fs
+from vcfdbr_spark.schema import VcfHeader
 from vcfdbr_spark.sources.vcf import VcfTables
 
 GENE_MAP_COLS = [
@@ -87,12 +89,172 @@ def _catalog_base(path: str) -> str:
     return "vcfdb_" + re.sub(r"[^A-Za-z0-9_]", "_", os.path.abspath(path)).strip("_")
 
 
+# Each fact table's sort keys: the range partitioning and in-file sort
+# order whose Parquet row-group stats stand in for its B-tree index.
+TABLE_SORTS = {
+    "variant_info": ("variant_id",),
+    "variant_impact": ("symbol", "variant_id"),
+    "variant_geno": ("variant_id", "sample"),
+}
+
+
+def store_manifest(
+    header: VcfHeader,
+    mode: str = "table",
+    geno_bucket_width: int | None = None,
+    bucketed: bool = False,
+    n_buckets: int | None = None,
+    streamed: bool = False,
+) -> dict:
+    """The store manifest, which is also the ``layout`` that
+    :func:`write_table` writes by."""
+    manifest = {
+        "mode": mode,
+        "geno_bucket_width": geno_bucket_width,
+        "sections": sorted(header.raw_sections),
+        "samples": header.samples,
+        "bucketed": bool(bucketed),
+        "n_buckets": n_buckets if bucketed else None,
+    }
+    if streamed:
+        manifest["streamed"] = True
+    return manifest
+
+
+def write_table(
+    df: DataFrame,
+    path: str,
+    table: str,
+    layout: dict,
+    mode: str = "overwrite",
+    n_partitions: int | None = None,
+    dest: str | None = None,
+) -> None:
+    """Write ``df`` as the fact table ``table`` of the store at ``path``
+    in the store's ``layout`` (its manifest).  The one place a table's
+    physical design is decided; build, append, compaction and the
+    stream's fold all write through it:
+
+    - the :data:`TABLE_SORTS` keys range-partition the rows (into
+      ``n_partitions`` files when given) and sort each file;
+    - ``bucketed`` stores hash-bucket variant_info and variant_geno on
+      ``variant_id`` through the catalog (:func:`write_vcfdb`);
+    - ``file`` mode hive-partitions variant_geno by ``vbucket`` (one
+      sorted file per bucket) and gives variant_info a ``geno`` column
+      with the variant's bucket dir; each column is added when absent;
+    - ``streamed`` stores partition every table by ``ingest_batch``.
+
+    ``dest`` is the directory written, ``<path>/<table>`` by default;
+    a compaction passes its swap's ``.tmp``.
+    """
+    dest = dest or f"{path}/{table}"
+    keys = TABLE_SORTS.get(table, ())
+    if layout.get("bucketed") and table in ("variant_info", "variant_geno"):
+        from vcfdbr_spark.plans.bucketing import write_bucketed
+
+        n = int(layout["n_buckets"])
+        write_bucketed(
+            df.repartition(n, "variant_id"),
+            f"{_catalog_base(path)}_{table}",
+            ["variant_id"],
+            n,
+            sort_cols=list(keys),
+            path=dest,
+        )
+        return
+    file_mode = layout["mode"] == "file"
+    if file_mode:
+        bucket = (F.col("variant_id") / int(layout["geno_bucket_width"])).cast("long")
+    if file_mode and table == "variant_info" and "geno" not in df.columns:
+        # reference parity: file mode records a per-variant genotype
+        # path in variant_info.geno (pipeline/02-build-db.R:433-436);
+        # the engine's unit of genotype storage is the id bucket, so
+        # the path points at the variant's vbucket partition directory
+        df = df.withColumn(
+            "geno",
+            F.concat(F.lit(f"{path}/variant_geno/vbucket="), bucket.cast("string")),
+        )
+    parts = ["ingest_batch"] if layout.get("streamed") else []
+    if file_mode and table == "variant_geno":
+        if "vbucket" not in df.columns:
+            df = df.withColumn("vbucket", bucket)
+        df, parts = df.repartition("vbucket"), ["vbucket"]
+    elif keys:
+        # a streamed table range-partitions on its sort keys too: its
+        # folded -1 partition is nearly the whole table, and hashing on
+        # ingest_batch would funnel it into a single write task
+        df = df.repartitionByRange(*([n_partitions] if n_partitions else []), *keys)
+    if keys:
+        df = df.sortWithinPartitions(*keys)
+    writer = df.write.mode(mode)
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(dest)
+
+
+def write_small(path: str, samples: DataFrame, metadata: dict[str, DataFrame]) -> None:
+    """The single-file dimension tables: samples and one table per
+    header section under ``_meta/``."""
+    samples.coalesce(1).write.mode("overwrite").parquet(f"{path}/samples")
+    for section, df in metadata.items():
+        df.coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta/{section}")
+
+
+def write_gene_map(path: str, variant_impact: DataFrame) -> None:
+    """gene_map, one file, built from ``variant_impact``."""
+    build_gene_map(variant_impact).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/gene_map"
+    )
+
+
+def write_tables(
+    tables: VcfTables,
+    path: str,
+    layout: dict,
+    mode: str = "overwrite",
+    gene_map_from: Callable[[], DataFrame] | None = None,
+) -> None:
+    """Write one parse's tables into the store at ``path``: each fact
+    table through :func:`write_table` in ``mode``, then gene_map from
+    ``gene_map_from()`` after variant_impact (default: the parse's own
+    impact table; an append passes the whole stored one).  An
+    overwrite also writes samples and ``_meta``; an append keeps them.
+
+    The table writes are independent Spark jobs over the same shared
+    (persisted) parse — they are submitted concurrently from driver
+    threads so the cluster overlaps their shuffles instead of idling
+    between jobs.  The block manager computes each cached partition
+    once (concurrent consumers block on the same partition lock), so
+    the shared parent is still evaluated a single time.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    def write(table: str) -> None:
+        write_table(getattr(tables, table), path, table, layout, mode)
+
+    def write_impact() -> None:
+        write("variant_impact")
+        impact = gene_map_from() if gene_map_from else tables.variant_impact
+        write_gene_map(path, impact)
+
+    jobs = [lambda: write("variant_info")]
+    if mode == "overwrite":
+        jobs.append(lambda: write_small(path, tables.samples, tables.metadata))
+    if tables.variant_impact is not None:
+        jobs.append(write_impact)
+    if tables.variant_geno is not None:
+        jobs.append(lambda: write("variant_geno"))
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = [pool.submit(j) for j in jobs]
+        for f in futures:
+            f.result()  # re-raise the first failure
+
+
 def write_vcfdb(
     tables: VcfTables,
     path: str,
     mode: str = "table",
     geno_bucket_width: int = 100_000,
-    info_partitions: int | None = None,
     bucketed: bool = False,
     n_buckets: int = 16,
 ) -> None:
@@ -112,122 +274,11 @@ def write_vcfdb(
     assert mode in ("table", "file")
     if bucketed and mode != "table":
         raise ValueError("bucketed layout requires mode='table'")
-    info = tables.variant_info
-    if mode == "file":
-        # reference parity: file mode records a per-variant genotype
-        # path in variant_info.geno (pipeline/02-build-db.R:433-436);
-        # the engine's unit of genotype storage is the id bucket, so
-        # the path points at the variant's vbucket partition directory
-        info = info.withColumn(
-            "geno",
-            F.concat(
-                F.lit(f"{path}/variant_geno/vbucket="),
-                (F.col("variant_id") / geno_bucket_width)
-                .cast("long")
-                .cast("string"),
-            ),
-        )
-
-    def write_info() -> None:
-        if bucketed:
-            from vcfdbr_spark.plans.bucketing import write_bucketed
-
-            write_bucketed(
-                info.repartition(n_buckets, "variant_id"),
-                f"{_catalog_base(path)}_variant_info",
-                ["variant_id"],
-                n_buckets,
-                sort_cols=["variant_id"],
-                path=f"{path}/variant_info",
-            )
-        else:
-            range_args = [info_partitions] if info_partitions else []
-            (
-                info.repartitionByRange(*range_args, "variant_id")
-                .sortWithinPartitions("variant_id")
-                .write.mode("overwrite")
-                .parquet(f"{path}/variant_info")
-            )
-
-    def write_impact() -> None:
-        (
-            tables.variant_impact.repartitionByRange("symbol", "variant_id")
-            .sortWithinPartitions("symbol", "variant_id")
-            .write.mode("overwrite")
-            .parquet(f"{path}/variant_impact")
-        )
-        build_gene_map(tables.variant_impact).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/gene_map")
-
-    def write_geno() -> None:
-        geno = tables.variant_geno
-        if mode == "file":
-            (
-                geno.withColumn(
-                    "vbucket",
-                    (F.col("variant_id") / geno_bucket_width).cast("long"),
-                )
-                .repartition("vbucket")
-                .sortWithinPartitions("variant_id", "sample")
-                .write.mode("overwrite")
-                .partitionBy("vbucket")
-                .parquet(f"{path}/variant_geno")
-            )
-        elif bucketed:
-            from vcfdbr_spark.plans.bucketing import write_bucketed
-
-            write_bucketed(
-                geno.repartition(n_buckets, "variant_id"),
-                f"{_catalog_base(path)}_variant_geno",
-                ["variant_id"],
-                n_buckets,
-                sort_cols=["variant_id", "sample"],
-                path=f"{path}/variant_geno",
-            )
-        else:
-            (
-                geno.repartitionByRange("variant_id", "sample")
-                .sortWithinPartitions("variant_id", "sample")
-                .write.mode("overwrite")
-                .parquet(f"{path}/variant_geno")
-            )
-
-    def write_small() -> None:
-        tables.samples.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/samples"
-        )
-        for section, df in tables.metadata.items():
-            df.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/_meta/{section}"
-            )
-
-    # The table writes are independent Spark jobs over the same shared
-    # (persisted) parse — submit them concurrently from driver threads
-    # so the cluster overlaps their shuffles instead of idling between
-    # jobs.  The block manager computes each cached partition once
-    # (concurrent consumers block on the same partition lock), so the
-    # shared parent is still evaluated a single time.
-    jobs = [write_info, write_small]
-    if tables.variant_impact is not None:
-        jobs.append(write_impact)
-    if tables.variant_geno is not None:
-        jobs.append(write_geno)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futures = [pool.submit(j) for j in jobs]
-        for f in futures:
-            f.result()  # re-raise the first failure
-    manifest = {
-        "mode": mode,
-        "geno_bucket_width": geno_bucket_width,
-        "sections": sorted(tables.metadata),
-        "samples": tables.header.samples,
-        "bucketed": bool(bucketed),
-        "n_buckets": n_buckets if bucketed else None,
-    }
-    write_manifest(info.sparkSession, path, manifest)
+    layout = store_manifest(
+        tables.header, mode, geno_bucket_width, bucketed, n_buckets
+    )
+    write_tables(tables, path, layout)
+    write_manifest(tables.variant_info.sparkSession, path, layout)
 
 
 class VcfDb:
@@ -280,12 +331,10 @@ class VcfDb:
             ddl = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
             )
-            sort_cols = (
-                "variant_id" if name == "variant_info" else "variant_id, sample"
-            )
             self.spark.sql(
                 f"CREATE TABLE {cat_name} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY (variant_id) SORTED BY ({sort_cols}) "
+                f"CLUSTERED BY (variant_id) "
+                f"SORTED BY ({', '.join(TABLE_SORTS[name])}) "
                 f"INTO {int(self.manifest['n_buckets'])} BUCKETS "
                 f"LOCATION '{self.path}/{name}'"
             )

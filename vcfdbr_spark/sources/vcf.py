@@ -253,7 +253,6 @@ def read_vcf(
     multi_value: str = "melt",
     probe_rows: int = 1000,
     exonic_on_consequence: bool = False,
-    id_partitions: int | None = None,
     id_start: int = 1,
 ) -> VcfTables:
     """Parse a (biallelic-split) VCF into the three-table relational
@@ -271,23 +270,7 @@ def read_vcf(
     header = read_header(first_vcf_file(path))
     parsed = parse_records(spark, path, header)
 
-    # Reject channel: multiallelic sites (pipeline/01:43-53 — the
-    # reference aborts the build on these) plus malformed records
-    # (unparseable POS), surfaced as a DataFrame with a reason column
-    # instead of silently ingesting NULL coordinates.
-    is_multi = F.col("alt").contains(",")
-    is_malformed = F.col("start").isNull()
-    rejects = parsed.filter(is_multi | is_malformed).select(
-        "chr",
-        "start",
-        "ref",
-        "alt",
-        F.when(is_multi, "multiallelic").otherwise("malformed").alias("reason"),
-    )
-    ok = parsed.filter(~is_multi & ~is_malformed)
-
-    # Dense sequential variant_id in (contig-rank, pos, ref, alt) order.
-    ok = ok.withColumn("_crank", contig_rank_expr(header))
+    rejects, ok = split_rejects_and_id(parsed, header, id_start)
     # Schema probe BEFORE persisting: a limit() must never be the
     # first action on a persisted frame — the truncated consumption
     # poisons the partition cache (observed: ~2/3 of rows lost from
@@ -297,18 +280,6 @@ def read_vcf(
         kept_fields = probe_format_fields_local(
             first_vcf_file(path), header, probe_rows, multi_value
         )
-    ok = with_dense_ids(
-        ok,
-        ["_crank", "chr", "start", "ref", "alt"],
-        id_col="variant_id",
-        start=id_start,
-        # genome-shaped bucketing: one bucket per (contig, 1Mb window)
-        # — monotone prefix of the sort order, ~3k buckets per genome,
-        # each sorting independently
-        bucket=F.struct(
-            F.col("_crank"), F.col("chr"), F.floor(F.col("start") / 1_000_000)
-        ),
-    ).drop("_crank")
     # Three tables branch off this parse: materialize it once.
     ok = ok.persist()
 
@@ -328,6 +299,45 @@ def read_vcf(
         metadata=metadata,
         rejects=rejects,
     )
+
+
+def split_rejects_and_id(
+    parsed: DataFrame, header: VcfHeader, id_start: int = 1
+) -> tuple[DataFrame, DataFrame]:
+    """``(rejects, keyed)`` from a parsed frame; both lazy.  Shared by
+    the batch read, the resumable build and the streaming ingest.
+
+    Reject channel: multiallelic sites (pipeline/01:43-53 — the
+    reference aborts the build on these) plus malformed records
+    (unparseable POS), surfaced as a DataFrame with a reason column
+    instead of silently ingesting NULL coordinates.  ``keyed`` is the
+    rest, with a dense sequential ``variant_id`` from ``id_start`` in
+    (contig-rank, pos, ref, alt) order."""
+    is_multi = F.col("alt").contains(",")
+    is_malformed = F.col("start").isNull()
+    rejects = parsed.filter(is_multi | is_malformed).select(
+        "chr",
+        "start",
+        "ref",
+        "alt",
+        F.when(is_multi, "multiallelic").otherwise("malformed").alias("reason"),
+    )
+    ok = parsed.filter(~is_multi & ~is_malformed).withColumn(
+        "_crank", contig_rank_expr(header)
+    )
+    keyed = with_dense_ids(
+        ok,
+        ["_crank", "chr", "start", "ref", "alt"],
+        id_col="variant_id",
+        start=id_start,
+        # genome-shaped bucketing: one bucket per (contig, 1Mb window)
+        # — monotone prefix of the sort order, ~3k buckets per genome,
+        # each sorting independently
+        bucket=F.struct(
+            F.col("_crank"), F.col("chr"), F.floor(F.col("start") / 1_000_000)
+        ),
+    ).drop("_crank")
+    return rejects, keyed
 
 
 def derive_tables(

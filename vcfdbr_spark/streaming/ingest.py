@@ -878,55 +878,38 @@ def stream_decontaminate(
             eval_index.unpersist()
 
 
-def _finalize_stream_store(spark: SparkSession, out_dir: str, header) -> None:
+def _finalize_stream_store(
+    spark: SparkSession, out_dir: str, header, layout: dict
+) -> None:
     """Make the streamed output an openable VcfDb store: samples +
     header metadata tables, gene_map rebuilt over every streamed
-    batch, and the store manifest — so a user queries a streamed
-    store exactly like a batch-built one (``open_vcfdb`` → filter /
-    pull / sql).  Idempotent: re-runs after each stream drain rewrite
-    only the small dimension tables."""
-    from vcfdbr_spark.sources.store import build_gene_map, write_manifest
+    batch, and the store manifest ``layout`` — so a user queries a
+    streamed store exactly like a batch-built one (``open_vcfdb`` →
+    filter / pull / sql).  Idempotent: re-runs after each stream drain
+    rewrite only the small dimension tables."""
+    from vcfdbr_spark.sources.store import (
+        write_gene_map,
+        write_manifest,
+        write_small,
+    )
     from vcfdbr_spark.sources.vcf import build_metadata
 
-    samples, metadata = build_metadata(spark, header)
-    samples.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/samples")
-    for section, df in metadata.items():
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/_meta/{section}"
-        )
+    write_small(out_dir, *build_metadata(spark, header))
     try:
         impact = spark.read.parquet(f"{out_dir}/variant_impact")
     except Exception:
         impact = None  # no CSQ in this VCF → no impact table
     if impact is not None:
-        build_gene_map(impact).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/gene_map"
-        )
-    write_manifest(spark, out_dir, {
-        "mode": "table",
-        "geno_bucket_width": None,
-        "sections": sorted(metadata),
-        "samples": header.samples,
-        "bucketed": False,
-        "n_buckets": None,
-        "streamed": True,
-    })
+        write_gene_map(out_dir, impact)
+    write_manifest(spark, out_dir, layout)
 
 
 _STREAM_TABLES = ("variant_info", "variant_impact", "variant_geno", "_rejects")
 
-# sort applied inside the folded partition at compaction (scan
-# efficiency parity with sources/build._COMPACT_SORTS; _rejects is
-# tiny and unsorted)
-_STREAM_COMPACT_SORTS = {
-    "variant_info": ["variant_id"],
-    "variant_impact": ["symbol", "variant_id"],
-    "variant_geno": ["variant_id", "sample"],
-}
-
 
 def _compact_stream_table(
-    spark: SparkSession, table_path: str, current_batch_id: int
+    spark: SparkSession, out_dir: str, table: str, current_batch_id: int,
+    layout: dict,
 ) -> None:
     """Fold a streamed table's ``ingest_batch=N`` tail dirs into ONE
     consolidated ``ingest_batch=-1`` partition, leaving the CURRENT
@@ -941,14 +924,17 @@ def _compact_stream_table(
 
     The swap is whole-table, by :func:`vcfdbr_spark.fs.swap_dir`: the
     complete new layout — folded ``-1`` partition plus the current
-    batch's dir — replaces the table, so a crash leaves the original
+    batch's dir, written by :func:`~vcfdbr_spark.sources.store.
+    write_table` — replaces the table, so a crash leaves the original
     or the finished copy, never dup/missing rows; the stream heals a
     half-done swap at its next start.  Cost is O(table) per
     compaction (same model as the band-index fold); ``compact_every``
     amortizes it — raise it for very long streams.
     """
     from vcfdbr_spark import fs as _fs
+    from vcfdbr_spark.sources.store import write_table
 
+    table_path = f"{out_dir}/{table}"
     tail = [
         d
         for d in _fs.list_subdirs(spark, table_path, "ingest_batch=")
@@ -956,7 +942,6 @@ def _compact_stream_table(
     ]
     if not tail:
         return
-    table = table_path.rstrip("/").rsplit("/", 1)[-1]
     # Zero-row batches (the common _rejects case) write schema-only
     # (or no) part files.  Two husk traps: a table with NO data files
     # fails schema inference outright, and a readable-but-all-empty
@@ -982,17 +967,9 @@ def _compact_stream_table(
         F.when(F.col("ingest_batch") == current_batch_id,
                F.col("ingest_batch")).otherwise(F.lit(-1)),
     )
-    sort_cols = _STREAM_COMPACT_SORTS.get(table)
-    if sort_cols:
-        # range-partition on the SORT keys, not on ingest_batch — the
-        # folded -1 partition is nearly the whole table, and hashing
-        # on ingest_batch would funnel it into a single write task
-        folded = folded.repartitionByRange(*sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
     _fs.swap_dir(
         spark, table_path,
-        lambda tmp: folded.write.partitionBy("ingest_batch").parquet(tmp),
+        lambda tmp: write_table(folded, out_dir, table, layout, dest=tmp),
     )
 
 
@@ -1046,16 +1023,17 @@ def stream_vcf_ingest(
     ``compact`` CLI remains usable after the stream stops)."""
     import json
 
-    from vcfdbr_spark.operators.ids import with_dense_ids
     from vcfdbr_spark.schema import read_header
+    from vcfdbr_spark.sources.store import store_manifest
     from vcfdbr_spark.sources.vcf import (
-        contig_rank_expr,
         derive_tables,
         parse_lines,
         probe_format_fields_local,
+        split_rejects_and_id,
     )
 
     header = read_header(header_path)
+    layout = store_manifest(header, streamed=True)
     kept_fields = []
     if header.samples and header.format:
         kept_fields = probe_format_fields_local(
@@ -1096,37 +1074,14 @@ def stream_vcf_ingest(
         # replayed batch: reuse its recorded id range (manifest carry,
         # no scan of prior batches' output)
         start = int(prog["batches"].get(key, {}).get("id_start", prog["next_id"]))
-        tables = ("variant_info", "variant_impact", "variant_geno", "_rejects")
-        for t in tables:
+        for t in _STREAM_TABLES:
             _fs.delete_dir(spark_l, f"{out_dir}/{t}/ingest_batch={batch_id}")
 
-        parsed = parse_lines(batch_df.select("value"), header)
-        is_multi = F.col("alt").contains(",")
-        is_malformed = F.col("start").isNull()
-        (
-            parsed.filter(is_multi | is_malformed)
-            .select(
-                "chr", "start", "ref", "alt",
-                F.when(is_multi, "multiallelic")
-                .otherwise("malformed")
-                .alias("reason"),
-            )
-            .write.parquet(f"{out_dir}/_rejects/ingest_batch={batch_id}")
+        rejects, keyed = split_rejects_and_id(
+            parse_lines(batch_df.select("value"), header), header, start
         )
-        ok = (
-            parsed.filter(~is_multi & ~is_malformed)
-            .withColumn("_crank", contig_rank_expr(header))
-        )
-        keyed = with_dense_ids(
-            ok,
-            ["_crank", "chr", "start", "ref", "alt"],
-            id_col="variant_id",
-            start=start,
-            bucket=F.struct(
-                F.col("_crank"), F.col("chr"),
-                F.floor(F.col("start") / 1_000_000),
-            ),
-        ).drop("_crank").persist()
+        rejects.write.parquet(f"{out_dir}/_rejects/ingest_batch={batch_id}")
+        keyed = keyed.persist()
         try:
             n = keyed.count()
             info, impact, geno = derive_tables(
@@ -1159,8 +1114,8 @@ def stream_vcf_ingest(
                 if d.rsplit("=", 1)[-1] != "-1"
             ]
         ) >= compact_every:
-            for t in tables:
-                _compact_stream_table(spark_l, f"{out_dir}/{t}", batch_id)
+            for t in _STREAM_TABLES:
+                _compact_stream_table(spark_l, out_dir, t, batch_id, layout)
 
     q = (
         records.writeStream.foreachBatch(_write_batch)
@@ -1170,4 +1125,4 @@ def stream_vcf_ingest(
     )
     q.awaitTermination()
     if finalize:
-        _finalize_stream_store(spark, out_dir, header)
+        _finalize_stream_store(spark, out_dir, header, layout)
