@@ -217,25 +217,38 @@ def test_bucketed_store_pull_join_has_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan2
 
 
-def test_filter_test_plan_properties(spark, tmp_path):
-    """The canonical query must: push the symbol filter to the scan,
-    prune columns, broadcast the filtered side, avoid cartesians."""
+def test_filter_test_plan_properties(spark, tmp_path, monkeypatch):
+    """The canonical query reads info by id: the gene's ids reach the
+    info scan as one pushed IN (never an OR of id ranges), with the af
+    bound pushed too, columns pruned and no cartesian.  Past the id
+    limit it falls back to the join: the symbol filter reaches the
+    impact scan and the filtered side broadcasts."""
+    from vcfdbr_spark.operators import query
+
     vcf = write_vcf(str(tmp_path / "toy.vcf"))
     from vcfdbr_spark.sources.store import open_vcfdb, write_vcfdb
     from vcfdbr_spark.sources.vcf import read_vcf
 
     write_vcfdb(read_vcf(spark, vcf), str(tmp_path / "db"))
     db = open_vcfdb(spark, str(tmp_path / "db"))
+
+    def check(q):
+        q.collect()  # finalize AQE plan
+        assert_no_cartesian(q)
+        for schema in scan_schemas(q):
+            # column pruning: no scan should read the wide geno/exon cols
+            assert "gt_raw" not in schema and "biotype" not in schema
+        return pushed_filters(q)
+
+    (pf,) = check(filter_test(db.variant_impact, db.variant_info, "GENE2", af=0.9))
+    assert pf.count("In(variant_id") == 1 and "Or(" not in pf
+    assert "af" in pf  # predicate reached the parquet scan
+
+    monkeypatch.setattr(query, "ID_LIST_LIMIT", 1)  # GENE2 has 2 ids
     q = filter_test(db.variant_impact, db.variant_info, "GENE2", af=0.9)
-    q.collect()  # finalize AQE plan
-    assert_no_cartesian(q)
+    pf = " ".join(check(q))
     assert_broadcast_join(q)
-    pf = " ".join(pushed_filters(q))
-    assert "symbol" in pf  # predicate reached the parquet scan
-    assert "af" in pf
-    for schema in scan_schemas(q):
-        # column pruning: no scan should read the wide geno/exon cols
-        assert "gt_raw" not in schema and "biotype" not in schema
+    assert "symbol" in pf and "af" in pf
 
 
 def test_cli_stream_ingest_and_append_array_mode(spark, tmp_path):

@@ -1321,3 +1321,30 @@ def test_set_mtime_reads_the_time_back(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(_fs, "_fs", lambda spark, path: (ignoring, path))
     with pytest.raises(OSError, match="s3a:// filesystem ignored setTimes"):
         _fs.set_mtime(spark, "s3a://bucket/part-0.parquet", 1_000_000.0)
+
+
+def test_scratch_dir_needs_shared_dir_off_local(monkeypatch):
+    """Off a local master, scratch_dir refuses the driver-local temp
+    dir (executors could not read it) with an error naming the conf;
+    local masters and a set conf still get a work dir."""
+    import os
+    from types import SimpleNamespace
+
+    import pytest
+
+    from vcfdbr_spark import fs as _fs
+
+    def session(**conf):
+        return SimpleNamespace(conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)))
+
+    for master in ("yarn", "spark://host:7077", "k8s://https://host"):
+        with pytest.raises(ValueError, match=r"spark\.vcfdbr\.scratch\.dir"):
+            _fs.scratch_dir(session(**{"spark.master": master}), "q")
+    local = _fs.scratch_dir(session(**{"spark.master": "local[2]"}), "q")
+    assert os.path.isdir(local)
+    os.rmdir(local)
+    made = []
+    monkeypatch.setattr(_fs, "makedirs", lambda spark, path: made.append(path))
+    shared = session(**{"spark.master": "yarn", "spark.vcfdbr.scratch.dir": "hdfs://nn/tmp"})
+    path = _fs.scratch_dir(shared, "q")
+    assert path.startswith("hdfs://nn/tmp/q-") and made == [path]

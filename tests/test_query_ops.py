@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -88,6 +90,81 @@ def test_pull_geno_test(db, oracle):
     assert len(got) == len(want) == 4
 
 
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_gene_reads_fetch_by_id(spark, tmp_path, monkeypatch):
+    """filter_test and pull_geno_test resolve the gene to its ids in one
+    job and then read by id: at most 2 and 3 jobs, equal to the oracle
+    on an appended store (a gene's ids then sit in two runs).  An
+    unknown gene returns no rows with the same columns; past the id
+    limit, the join fallback returns the same rows."""
+    from vcfdbr_spark import append_vcf
+    from vcfdbr_spark.operators import query
+    from vcfdbr_spark.plans.layout import physical_plan
+
+    vcf = write_vcf(str(tmp_path / "toy.vcf"))
+    store = str(tmp_path / "store")
+    write_vcfdb(read_vcf(spark, vcf), store, mode="table")
+    append_vcf(spark, vcf, store)
+    db = open_vcfdb(spark, store)
+    con = duckdb.connect()
+    for t in ("variant_info", "variant_impact", "variant_geno"):
+        db.table(t)  # pins the schema: a first read infers it in a job
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{store}/{t}/*.parquet')"
+        )
+    af = 0.6
+
+    def reads(symbol):
+        ft, ft_jobs = _jobs(spark, lambda: filter_test(
+            db.variant_impact, db.variant_info, symbol, af=af
+        ))
+        rows, n = _jobs(spark, ft.collect)
+        assert ft_jobs + n <= 2
+        pg, n = _jobs(spark, lambda: pull_geno_test(
+            db.variant_impact, db.variant_info, db.variant_geno, symbol, af=af
+        ).collect())
+        assert n <= 3
+        return ft, sorted(map(tuple, rows)), sorted((r["variant_id"], r["sample"]) for r in pg)
+
+    rare = f"""SELECT DISTINCT i.variant_id, i.symbol, v.af
+        FROM variant_impact i JOIN variant_info v USING (variant_id)
+        WHERE i.symbol = ? AND v.af < {af}"""
+    got = {s: reads(s) for s in ("GENE1", "GENE2", "GENE3", "NOPE")}
+    for s, (_, rows, geno) in got.items():
+        assert rows == sorted(con.execute(rare, [s]).fetchall())
+        assert geno == sorted(con.execute(
+            f"SELECT variant_id, sample FROM variant_geno "
+            f"WHERE variant_id IN (SELECT variant_id FROM ({rare}))", [s]
+        ).fetchall())
+    assert len(got["GENE2"][1]) == 4  # two ids in each of two runs
+    assert got["NOPE"][1] == [] and got["NOPE"][2] == []
+    columns = [(f.name, f.dataType) for f in got["GENE2"][0].schema]
+    assert columns == [(f.name, f.dataType) for f in got["NOPE"][0].schema]
+
+    monkeypatch.setattr(query, "ID_LIST_LIMIT", 1)
+    ft = filter_test(db.variant_impact, db.variant_info, "GENE2", af=af)
+    assert sorted(map(tuple, ft.collect())) == got["GENE2"][1]
+    assert [(f.name, f.dataType) for f in ft.schema] == columns
+    assert "BroadcastHashJoin" in physical_plan(ft)
+    pg = pull_geno_test(
+        db.variant_impact, db.variant_info, db.variant_geno, "GENE2", af=af
+    )
+    assert sorted((r["variant_id"], r["sample"]) for r in pg.collect()) == got["GENE2"][2]
+    assert "BroadcastHashJoin" in physical_plan(pg)
+
+
 def test_gene_map(db, oracle):
     gm = db.gene_map.collect()
     # distinct over available dimension columns; '' → NULL
@@ -145,6 +222,9 @@ def test_file_mode_layout(spark, tmp_path):
     ft = filter_test(db.variant_impact, db.variant_info, "GENE2", af=2.0)
     assert "geno" in ft.columns
     assert all(r["geno"] is not None for r in ft.collect())
+    # file mode coerces ids like table mode before the bucket arithmetic
+    with pytest.raises(ValueError, match="must be integers"):
+        db.pull(["3"])
 
 
 def test_gene_map_empty_string_normalized(spark, tmp_path):

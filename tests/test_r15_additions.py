@@ -12,7 +12,8 @@ unchanged observable behavior:
   the distributed one exactly, nullability included.
 - ``eager_checkpoint``: the scoped ``parallelismFirst`` toggle restores
   the session conf, returns identical rows, and a small frame
-  checkpoints into one partition (the frozen-partition-leak fix).
+  checkpoints into one partition (the frozen-partition-leak fix); two
+  threads checkpointing at once leave the conf unset.
 - ``ivf_assign``: ``spread=True`` (build path) and ``spread=False``
   (probe path) produce the identical assignment.
 """
@@ -115,6 +116,44 @@ def test_eager_checkpoint_scoped_conf_and_small_frame_partitions(spark):
     )
     # a KB-sized frame must not freeze parallelism-count partitions
     assert ck.rdd.getNumPartitions() == 1
+
+
+def test_eager_checkpoint_conf_restored_under_threads(spark):
+    """Two driver threads checkpointing at once leave the
+    session-global ``parallelismFirst`` unset: one call's restore can
+    no longer run inside the other's flip and pin ``false``."""
+    import threading
+
+    from vcfdbr_spark.plans.checkpoints import eager_checkpoint
+
+    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    spark.conf.unset(key)
+    start = threading.Barrier(2)
+    got, errors = {}, []
+
+    def work(seed):
+        try:
+            start.wait()
+            for r in range(4):
+                df = (
+                    spark.range(0, 2000)
+                    .withColumn("g", (F.col("id") + seed + r) % 11)
+                    .groupBy("g")
+                    .agg(F.count(F.lit(1)).alias("n"))
+                )
+                got[seed, r] = sorted(map(tuple, eager_checkpoint(df).collect()))
+        except Exception as e:  # surfaced on the main thread below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(s,)) for s in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert spark.conf.get(key, None) is None
+    assert all(sum(n for _, n in rows) == 2000 for rows in got.values())
+    assert len(got) == 8
 
 
 def test_ivf_assign_spread_flag_is_result_invariant(spark):

@@ -109,23 +109,25 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
 
     Rooted at ``spark.vcfdbr.scratch.dir`` when set — on a real
     cluster that must be a shared filesystem (``hdfs://``/``s3a://``)
-    because executors read the sources written under it; a
-    driver-local ``tempfile`` path would be executor-unreadable.
-    Unset (local mode, tests, benches) it falls back to a driver-local
-    temp dir, which IS the shared filesystem when driver and executors
-    share a host.  Remove with :func:`delete_dir` (scheme-portable),
-    never ``shutil.rmtree``."""
+    because executors read the sources written under it.  Unset, a
+    ``local`` master gets a driver-local temp dir (driver and executors
+    share the host), and any other master raises ``ValueError`` naming
+    the conf: executors could not read a driver-local path.  Remove
+    with :func:`delete_dir` (scheme-portable), never ``shutil.rmtree``."""
     import uuid
 
-    base = None
-    try:
-        base = spark.conf.get("spark.vcfdbr.scratch.dir")
-    except Exception:
-        base = None
+    base = spark.conf.get("spark.vcfdbr.scratch.dir", None)
     if base:
         path = f"{base.rstrip('/')}/{prefix}-{uuid.uuid4().hex}"
         makedirs(spark, path)
         return path
+    master = spark.conf.get("spark.master", "local")
+    if not master.startswith("local"):
+        raise ValueError(
+            f"master {master!r} is not local: set spark.vcfdbr.scratch.dir "
+            f"to a directory every executor can read (hdfs://, s3a://); "
+            f"a driver-local temp dir is unreadable on other hosts"
+        )
     import tempfile
 
     return tempfile.mkdtemp(prefix=f"{prefix}-")

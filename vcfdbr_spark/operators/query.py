@@ -1,12 +1,17 @@
 """Query-surface operators — SURVEY.md §2.C, the canonical read
 workload of the reference (benchmarks/00-benchmark-functions.R).
 
-Each function builds a lazy DataFrame (the reference's dbplyr verb
+Each function returns a lazy DataFrame (the reference's dbplyr verb
 chains build lazy SQL the same way, §3.2); the caller triggers
-execution.  Join strategy notes are inline — at 100 TB the filtered
-impact side of ``filter_test`` is small, so Catalyst/AQE broadcast it
-against the info scan; the geno pull is a left-semi join that prunes
-row groups on the range-sorted variant_id layout.
+execution.  The gene reads ``filter_test`` and ``pull_geno_test`` are
+index-then-fetch, the reference's "searches are index lookups, not
+scans": while the plan is built each runs a small driver collect of
+the gene's ids (a ``symbol``-pruned ``variant_impact`` scan), then
+reads ``variant_info`` — and ``variant_geno`` — by a ``variant_id``
+IN-list, pruned on the id-sorted layout.  The driver keeps at most
+``ID_LIST_LIMIT`` ids (its collect is one 8-byte Arrow id per impact
+row of the gene); a gene with more falls back to a join whose filtered
+impact side the planner broadcasts, so the big side never moves.
 """
 
 from __future__ import annotations
@@ -14,8 +19,74 @@ from __future__ import annotations
 import operator
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+# Most ids a plan carries as IN-list literals, and a gene read keeps on
+# the driver: a 100k-literal IN predicate bloats the plan (analysis and
+# codegen scale with expression count), so past this size the id set
+# rides as data in a join.
+ID_LIST_LIMIT = 5_000
+
+
+def int_ids(ids) -> list[int]:
+    """``ids`` as plain ints; anything else raises ``ValueError``
+    before an id reaches SQL text."""
+    try:
+        return [operator.index(i) for i in ids]
+    except TypeError as e:
+        raise ValueError(f"variant ids must be integers: {e}") from None
+
+
+def _by_ids(df: DataFrame, ids: list[int]) -> DataFrame:
+    """``df`` rows whose ``variant_id`` is in ``ids`` (at most
+    ``ID_LIST_LIMIT`` ints), as one IN predicate parsed from its SQL
+    text in one JVM call — ``Column.isin`` makes one py4j call per
+    literal, which dominated a 1,000-id pull."""
+    if not ids:
+        return df.filter(F.lit(False))
+    # literals typed like a bigint column: the analyzer wraps each
+    # untyped int literal in a Cast, 40 ms of a 1,777-id plan
+    suffix = "L" if isinstance(df.schema["variant_id"].dataType, LongType) else ""
+    return df.filter(F.expr(f"variant_id IN ({','.join(f'{i}{suffix}' for i in ids)})"))
+
+
+def _gene_ids(variant_impact: DataFrame, symbol: str) -> list[int] | None:
+    """The gene's distinct variant ids, sorted, from one job: a
+    ``symbol``-pruned impact scan collected as one Arrow column (8
+    bytes per impact row) and deduplicated on the driver — a JVM
+    ``distinct`` would add a shuffle job.  ``None`` when the gene has
+    more than ``ID_LIST_LIMIT`` ids."""
+    rows = variant_impact.filter(
+        (F.col("symbol") == symbol) & F.col("variant_id").isNotNull()
+    ).select("variant_id")
+    ids = np.unique(rows.toPandas()["variant_id"].to_numpy())
+    return int_ids(ids) if len(ids) <= ID_LIST_LIMIT else None
+
+
+def _rare_gene_variants(
+    variant_impact: DataFrame,
+    variant_info: DataFrame,
+    symbol: str,
+    af: float,
+    ids: list[int] | None,
+) -> DataFrame:
+    """``filter_test``'s frame for the gene ids ``_gene_ids`` returned:
+    the fetch by id, or the join when there were too many."""
+    keep = [c for c in ("variant_id", "geno", "af") if c in variant_info.columns]
+    right = variant_info.select(*keep).filter(F.col("af") < af)
+    if ids is None:
+        left = (
+            variant_impact.filter(F.col("symbol") == symbol)
+            .select("variant_id", "symbol")
+            .distinct()
+        )
+        return left.join(right, "variant_id", "inner")
+    return _by_ids(right, ids).select(
+        "variant_id", F.lit(symbol).alias("symbol"), *keep[1:]
+    )
 
 
 def filter_test(
@@ -26,16 +97,19 @@ def filter_test(
 ) -> DataFrame:
     """Per-gene rare-variant query (benchmarks/00-benchmark-functions.R:79-88):
     symbol filter → distinct (variant_id, symbol) → inner join info
-    (af < threshold), projecting any_of(variant_id, geno, af).
+    (af < threshold), projecting any_of(variant_id, geno, af) — columns
+    ``variant_id, symbol, [geno,] af``.
+
+    Runs one small driver collect while the plan is built — the gene's
+    ids — so the returned frame is one ``variant_info`` scan with
+    ``variant_id IN (…)`` and the ``af`` bound pushed to Parquet.  The
+    driver keeps at most ``ID_LIST_LIMIT`` ids; a gene with more falls
+    back to the join, whose filtered impact side the planner
+    broadcasts.
     """
-    left = (
-        variant_impact.filter(F.col("symbol") == symbol)
-        .select("variant_id", "symbol")
-        .distinct()
+    return _rare_gene_variants(
+        variant_impact, variant_info, symbol, af, _gene_ids(variant_impact, symbol)
     )
-    keep = [c for c in ("variant_id", "geno", "af") if c in variant_info.columns]
-    right = variant_info.select(*keep).filter(F.col("af") < af)
-    return left.join(right, "variant_id", "inner")
 
 
 def pull_vars_by_id(
@@ -43,30 +117,20 @@ def pull_vars_by_id(
 ) -> DataFrame:
     """Genotype pull by id set (benchmarks/00-benchmark-functions.R:45-51).
 
-    Literal lists become an IN-list predicate (pushed to Parquet
-    row-group stats on the id-sorted layout), parsed from the SQL text
-    of the ids in one JVM call — ``Column.isin`` makes one py4j call
-    per literal, which dominated a 1,000-id pull.  Every id must be an
-    integer (``int`` or a numpy integer; anything else raises
-    ``ValueError`` before the text is built), and an empty list pulls
-    no rows.  A DataFrame id set becomes a left-semi join — one
-    distributed query replaces the reference's fork-cluster per-bin
-    loop (:22-44).
+    Literal lists of up to ``ID_LIST_LIMIT`` ids become an IN-list
+    predicate (pushed to Parquet row-group stats on the id-sorted
+    layout).  Every id must be an integer (``int`` or a numpy integer;
+    anything else raises ``ValueError`` before the predicate is built),
+    and an empty list pulls no rows.  A longer list rides as data — an
+    Arrow-backed local frame feeding a broadcast-able semi-join — and a
+    DataFrame id set becomes a left-semi join: one distributed query
+    replaces the reference's fork-cluster per-bin loop (:22-44).
     """
     if isinstance(ids, DataFrame):
         ids_df = ids.select(F.col(ids.columns[0]).alias("variant_id")).distinct()
         return variant_geno.join(ids_df, "variant_id", "left_semi")
-    try:
-        ids = [operator.index(i) for i in ids]
-    except TypeError as e:
-        raise ValueError(f"variant ids must be integers: {e}") from None
-    if not ids:
-        return variant_geno.filter(F.lit(False))
-    if len(ids) > 5_000:
-        # a 100k-literal IN predicate bloats the plan (analysis +
-        # codegen scale with expression count); past this size the id
-        # set rides as data — an Arrow-backed local frame feeding a
-        # broadcast-able semi-join
+    ids = int_ids(ids)
+    if len(ids) > ID_LIST_LIMIT:
         import pandas as pd
 
         ids_df = variant_geno.sparkSession.createDataFrame(
@@ -76,8 +140,7 @@ def pull_vars_by_id(
         return variant_geno.join(
             F.broadcast(ids_df.distinct()), "variant_id", "left_semi"
         )
-    in_list = ",".join(map(str, ids))
-    return variant_geno.filter(F.expr(f"variant_id IN ({in_list})"))
+    return _by_ids(variant_geno, ids)
 
 
 def pull_geno_test(
@@ -88,9 +151,21 @@ def pull_geno_test(
     af: float = 0.01,
 ) -> DataFrame:
     """filter_test ∘ genotype pull (benchmarks/00-benchmark-functions.R:105-147):
-    genotype rows for every rare variant of a gene."""
-    ids = filter_test(variant_impact, variant_info, symbol, af).select("variant_id")
-    return variant_geno.join(ids.distinct(), "variant_id", "left_semi")
+    genotype rows for every rare variant of a gene.
+
+    Runs ``filter_test``'s driver collect, plus one more of its rare
+    ids, while the plan is built, and returns
+    ``pull_vars_by_id(variant_geno, rare_ids)``.  The driver keeps at
+    most ``ID_LIST_LIMIT`` ids; a gene with more falls back to a
+    semi-join of the geno table with ``filter_test``'s join plan.
+    """
+    ids = _gene_ids(variant_impact, symbol)
+    rare = _rare_gene_variants(
+        variant_impact, variant_info, symbol, af, ids
+    ).select("variant_id")
+    if ids is None:
+        return variant_geno.join(rare.distinct(), "variant_id", "left_semi")
+    return pull_vars_by_id(variant_geno, rare.toPandas()["variant_id"].tolist())
 
 
 def get_genes(gene_map: DataFrame) -> DataFrame:

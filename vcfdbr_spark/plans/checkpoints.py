@@ -25,7 +25,11 @@ deployment without threading a flag through every operator.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
+
+_FLIP_LOCK = threading.Lock()
 
 
 def has_checkpoint_dir(df: DataFrame) -> bool:
@@ -56,32 +60,32 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     100 TB frame keeps its many advisory-sized partitions — and the
     flag reverts immediately, so CPU-heavy post-shuffle stages
     elsewhere keep their parallelism-first coalescing.
+
+    The flag is session-global and driver threads checkpoint
+    concurrently, so calls run one at a time under a module lock:
+    unserialized, one call could restore the flag while another runs,
+    and the later restore left it pinned to ``false``.
     """
     spark = df.sparkSession
     key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    try:
-        # default=None → None when the key was never SET (conf.get
-        # without a default would return the config's built-in
-        # default, and the restore below would then pin it explicitly)
-        old = spark.conf.get(key, None)
-    except Exception:
-        old = None
-    try:
-        spark.conf.set(key, "false")
-    except Exception:
-        # conf not settable (exotic session) — checkpoint as-is
-        if has_checkpoint_dir(df):
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-    try:
-        if has_checkpoint_dir(df):
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    materialize = df.checkpoint if has_checkpoint_dir(df) else df.localCheckpoint
+    with _FLIP_LOCK:
+        try:
+            # default=None → None when the key was never SET (conf.get
+            # without a default would return the config's built-in
+            # default, and the restore below would then pin it explicitly)
+            old = spark.conf.get(key, None)
+            spark.conf.set(key, "false")
+        except Exception:
+            # conf not settable (exotic session) — checkpoint as-is
+            return materialize(eager=True)
+        try:
+            return materialize(eager=True)
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 def loop_checkpoint(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -379,16 +379,17 @@ class VcfDb:
         engine's rendering of the reference's one-file-per-variant
         O(1) access (README.md:32-36); in table mode the IN-list
         predicate prunes row groups on the id-sorted layout."""
-        from vcfdbr_spark.operators.query import pull_vars_by_id
+        from vcfdbr_spark.operators.query import int_ids, pull_vars_by_id
 
+        ids = int_ids(ids)
         geno = self.variant_geno
         if self.manifest["mode"] == "file":
             width = int(self.manifest["geno_bucket_width"])
             buckets = sorted({i // width for i in ids})
             geno = geno.filter(F.col("vbucket").isin(buckets))
         # id predicate via pull_vars_by_id: IN-list for small sets,
-        # Arrow semi-join past 5k ids (plan-size safety)
-        return pull_vars_by_id(geno, list(ids))
+        # Arrow semi-join past ID_LIST_LIMIT ids (plan-size safety)
+        return pull_vars_by_id(geno, ids)
 
 
 def open_vcfdb(spark: SparkSession, path: str) -> VcfDb:
