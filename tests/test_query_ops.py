@@ -154,6 +154,8 @@ def test_gene_reads_fetch_by_id(spark, tmp_path, monkeypatch):
     assert columns == [(f.name, f.dataType) for f in got["NOPE"][0].schema]
 
     monkeypatch.setattr(query, "ID_LIST_LIMIT", 1)
+    # past the limit the driver collect stops and the ids stay a frame
+    assert not isinstance(query._gene_ids(db.variant_impact, "GENE2"), list)
     ft = filter_test(db.variant_impact, db.variant_info, "GENE2", af=af)
     assert sorted(map(tuple, ft.collect())) == got["GENE2"][1]
     assert [(f.name, f.dataType) for f in ft.schema] == columns

@@ -8,10 +8,11 @@ index-then-fetch, the reference's "searches are index lookups, not
 scans": while the plan is built each runs a small driver collect of
 the gene's ids (a ``symbol``-pruned ``variant_impact`` scan), then
 reads ``variant_info`` — and ``variant_geno`` — by a ``variant_id``
-IN-list, pruned on the id-sorted layout.  The driver keeps at most
-``ID_LIST_LIMIT`` ids (its collect is one 8-byte Arrow id per impact
-row of the gene); a gene with more falls back to a join whose filtered
-impact side the planner broadcasts, so the big side never moves.
+IN-list, pruned on the id-sorted layout.  Driver memory is bounded by
+``ID_LIST_LIMIT``: the collect stops at ``ID_LIST_LIMIT + 1`` impact
+rows (one 8-byte Arrow id each), and a gene with more falls back to a
+join, ``pull_vars_by_id``'s semi-join with the filtered impact ids,
+whose small side the planner broadcasts so the big side never moves.
 """
 
 from __future__ import annotations
@@ -53,38 +54,27 @@ def _by_ids(df: DataFrame, ids: list[int]) -> DataFrame:
     return df.filter(F.expr(f"variant_id IN ({','.join(f'{i}{suffix}' for i in ids)})"))
 
 
-def _gene_ids(variant_impact: DataFrame, symbol: str) -> list[int] | None:
-    """The gene's distinct variant ids, sorted, from one job: a
-    ``symbol``-pruned impact scan collected as one Arrow column (8
-    bytes per impact row) and deduplicated on the driver — a JVM
-    ``distinct`` would add a shuffle job.  ``None`` when the gene has
-    more than ``ID_LIST_LIMIT`` ids."""
+def _gene_ids(variant_impact: DataFrame, symbol: str) -> list[int] | DataFrame:
+    """The gene's variant ids for ``pull_vars_by_id``: a sorted list
+    from one job — a ``symbol``-pruned impact scan collected as one
+    Arrow column of at most ``ID_LIST_LIMIT + 1`` rows and deduplicated
+    on the driver (a JVM ``distinct`` would add a shuffle job).  A gene
+    with more impact rows than ``ID_LIST_LIMIT`` keeps its ids off the
+    driver: the filtered scan itself is returned, for the semi-join."""
     rows = variant_impact.filter(
         (F.col("symbol") == symbol) & F.col("variant_id").isNotNull()
     ).select("variant_id")
-    ids = np.unique(rows.toPandas()["variant_id"].to_numpy())
-    return int_ids(ids) if len(ids) <= ID_LIST_LIMIT else None
+    head = rows.limit(ID_LIST_LIMIT + 1).toPandas()["variant_id"].to_numpy()
+    return rows if len(head) > ID_LIST_LIMIT else int_ids(np.unique(head))
 
 
-def _rare_gene_variants(
-    variant_impact: DataFrame,
-    variant_info: DataFrame,
-    symbol: str,
-    af: float,
-    ids: list[int] | None,
+def _rare_variants(
+    variant_info: DataFrame, symbol: str, af: float, ids: list[int] | DataFrame
 ) -> DataFrame:
-    """``filter_test``'s frame for the gene ids ``_gene_ids`` returned:
-    the fetch by id, or the join when there were too many."""
+    """``filter_test``'s frame for the gene ids ``_gene_ids`` returned."""
     keep = [c for c in ("variant_id", "geno", "af") if c in variant_info.columns]
     right = variant_info.select(*keep).filter(F.col("af") < af)
-    if ids is None:
-        left = (
-            variant_impact.filter(F.col("symbol") == symbol)
-            .select("variant_id", "symbol")
-            .distinct()
-        )
-        return left.join(right, "variant_id", "inner")
-    return _by_ids(right, ids).select(
+    return pull_vars_by_id(right, ids).select(
         "variant_id", F.lit(symbol).alias("symbol"), *keep[1:]
     )
 
@@ -101,21 +91,23 @@ def filter_test(
     ``variant_id, symbol, [geno,] af``.
 
     Runs one small driver collect while the plan is built — the gene's
-    ids — so the returned frame is one ``variant_info`` scan with
-    ``variant_id IN (…)`` and the ``af`` bound pushed to Parquet.  The
-    driver keeps at most ``ID_LIST_LIMIT`` ids; a gene with more falls
-    back to the join, whose filtered impact side the planner
-    broadcasts.
+    ids, at most ``ID_LIST_LIMIT + 1`` impact rows, so driver memory is
+    bounded by that limit — and returns one ``variant_info`` scan with
+    ``variant_id IN (…)`` and the ``af`` bound pushed to Parquet.  A
+    gene with more impact rows falls back to a join: ``variant_info``
+    semi-joined with the ``symbol``-filtered impact ids, a small side
+    the planner broadcasts.
     """
-    return _rare_gene_variants(
-        variant_impact, variant_info, symbol, af, _gene_ids(variant_impact, symbol)
-    )
+    return _rare_variants(variant_info, symbol, af, _gene_ids(variant_impact, symbol))
 
 
 def pull_vars_by_id(
     variant_geno: DataFrame, ids: Sequence[int] | DataFrame
 ) -> DataFrame:
-    """Genotype pull by id set (benchmarks/00-benchmark-functions.R:45-51).
+    """Genotype pull by id set (benchmarks/00-benchmark-functions.R:45-51);
+    also the gene reads' fetch from ``variant_info`` — any frame with a
+    ``variant_id`` column works, and this is the one place that picks
+    how an id set reaches the scan.
 
     Literal lists of up to ``ID_LIST_LIMIT`` ids become an IN-list
     predicate (pushed to Parquet row-group stats on the id-sorted
@@ -155,17 +147,17 @@ def pull_geno_test(
 
     Runs ``filter_test``'s driver collect, plus one more of its rare
     ids, while the plan is built, and returns
-    ``pull_vars_by_id(variant_geno, rare_ids)``.  The driver keeps at
-    most ``ID_LIST_LIMIT`` ids; a gene with more falls back to a
-    semi-join of the geno table with ``filter_test``'s join plan.
+    ``pull_vars_by_id(variant_geno, rare_ids)``.  Driver memory is
+    bounded by ``ID_LIST_LIMIT``: the rare ids are a subset of the
+    gene's.  For a gene past the limit the rare set stays a frame, and
+    the fallback is one query — the geno table semi-joined with
+    ``filter_test``'s join.
     """
     ids = _gene_ids(variant_impact, symbol)
-    rare = _rare_gene_variants(
-        variant_impact, variant_info, symbol, af, ids
-    ).select("variant_id")
-    if ids is None:
-        return variant_geno.join(rare.distinct(), "variant_id", "left_semi")
-    return pull_vars_by_id(variant_geno, rare.toPandas()["variant_id"].tolist())
+    rare = _rare_variants(variant_info, symbol, af, ids).select("variant_id")
+    if isinstance(ids, list):
+        rare = rare.toPandas()["variant_id"].tolist()
+    return pull_vars_by_id(variant_geno, rare)
 
 
 def get_genes(gene_map: DataFrame) -> DataFrame:
