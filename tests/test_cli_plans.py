@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.vcf_fixture import write_vcf
@@ -750,17 +751,42 @@ def test_ivf_drift_signal_and_reindex(spark, tmp_path, capsys):
     assert "healthy" in capsys.readouterr().out
 
 
-def test_cli_stream_dedup_empty_source(spark, tmp_path, capsys):
-    """ADVICE r7: a fresh/empty source dir fires zero batches, so
-    pairs/ is never created — the CLI must report zero pairs, not die
-    on an AnalysisException reading a missing path."""
+_EMPTY_STREAM_CASES = {
+    "stream-dedup": ("--docs-dir", [], "0 candidate pairs"),
+    "stream-exact-dedup": ("--docs-dir", [], "0 docs mapped, 0 duplicates"),
+    "stream-semantic-dedup": ("--vecs-dir", [], "0 candidate pairs"),
+    "stream-corpus-filter": ("--docs-dir", [], "0 docs kept"),
+    "stream-decontaminate": (
+        "--docs-dir", ["--eval-docs", "{evald}"], "0 docs kept"
+    ),
+    "stream-ivf-assign": (
+        "--vecs-dir", ["--centroids", "{cents}"], "0 vectors in index"
+    ),
+    "stream-sketch": ("--source", [], "0/1024 slots filled"),
+}
+
+
+@pytest.mark.parametrize("cmd", list(_EMPTY_STREAM_CASES))
+def test_cli_stream_dedup_empty_source(spark, tmp_path, capsys, cmd):
+    """ADVICE r7: a fresh/empty source dir fires zero batches, so no
+    batch=N output is ever created — every stream subcommand must
+    report zero, not die reading a missing path."""
+    src_flag, extra, want = _EMPTY_STREAM_CASES[cmd]
     src = tmp_path / "empty_in"
     src.mkdir()
+    evald, cents = str(tmp_path / "evald"), str(tmp_path / "cents")
+    spark.createDataFrame(
+        [(1, "held out doc")], "doc_id long, text string"
+    ).write.parquet(evald)
+    spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    ).write.parquet(cents)
     out = str(tmp_path / "sd_empty_out")
-    args = ["stream-dedup", "--docs-dir", str(src) + "/*", "--out", out,
+    args = [cmd, src_flag, str(src) + "/*", "--out", out,
             "--max-files-per-trigger", "1"]
+    args += [a.format(evald=evald, cents=cents) for a in extra]
     assert cli_main(args) == 0
-    assert "0 candidate pairs" in capsys.readouterr().out
+    assert want in capsys.readouterr().out
 
 
 def test_lm_selftrained_plan_scans_corpus_once_when_gated_on():

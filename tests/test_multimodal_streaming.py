@@ -462,6 +462,39 @@ def test_stream_ivf_assign_matches_batch_index(spark, tmp_path):
         stream_ivf_assign(spark, str(src) + "/*", out, other)
 
 
+def test_stream_ivf_assign_releases_centroids_when_a_batch_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that raises must not leave the stream's persisted
+    centroid frame cached: a long-lived driver restarting a failing
+    stream would otherwise accumulate one per attempt."""
+    from pyspark import StorageLevel
+
+    from vcfdbr_spark.operators import similarity
+    from vcfdbr_spark.streaming.ingest import stream_ivf_assign
+
+    schema = "vec_id long, embedding array<float>, label int"
+    rows = [(i, [float(i % 3), 1.0], 0) for i in range(6)]
+    cpath = str(tmp_path / "cents")
+    spark.createDataFrame(rows[:2], schema).select(
+        "vec_id", "embedding"
+    ).write.parquet(cpath)
+    src = tmp_path / "ivf_src"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+        str(src / "f0")
+    )
+
+    def failing_assign(*args, **kwargs):
+        raise RuntimeError("assign failed")
+
+    monkeypatch.setattr(similarity, "ivf_assign", failing_assign)
+    with pytest.raises(Exception, match="assign failed"):
+        stream_ivf_assign(spark, str(src) + "/*", str(tmp_path / "out"), cpath)
+    # a frame with the centroid frame's plan reports its cache entry
+    cents = spark.read.parquet(cpath).select("vec_id", "embedding")
+    assert cents.storageLevel == StorageLevel.NONE
+
+
 def test_stream_corpus_filter_first_seen_wins(spark, tmp_path):
     """The streaming capstone: per-batch quality gates, then fuzzy
     dedup against stream history with first-seen-wins — a doc
@@ -743,6 +776,25 @@ def test_stream_vcf_ingest_auto_compaction(spark, tmp_path):
     info = spark.read.parquet(f"{out}/variant_info")
     assert info.count() == 36  # healed history + new batch
     assert info.select("variant_id").distinct().count() == 36
+
+
+def test_finalize_stream_store_raises_on_unreadable_impact(spark, tmp_path):
+    """A streamed ``variant_impact`` that exists but cannot be read
+    fails finalize loudly instead of leaving the store without a
+    gene_map (only a missing table means "no CSQ in this VCF")."""
+    from vcfdbr_spark.schema import read_header
+    from vcfdbr_spark.sources.store import store_manifest
+    from vcfdbr_spark.streaming.ingest import _finalize_stream_store
+
+    header = read_header(write_vcf(str(tmp_path / "header.vcf")))
+    out = tmp_path / "db"
+    part = out / "variant_impact" / "ingest_batch=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        _finalize_stream_store(
+            spark, str(out), header, store_manifest(header, streamed=True)
+        )
 
 
 def test_compact_table_keeps_streamed_batches(spark, tmp_path):

@@ -20,6 +20,8 @@ import time
 
 from pyspark.sql import functions as F
 
+from vcfdbr_spark.streaming.ingest import read_stream_output
+
 
 @contextlib.contextmanager
 def _stage(name: str, enabled: bool):
@@ -797,7 +799,7 @@ def main(argv: list[str] | None = None) -> int:
             f"{args.prefix}/_checkpoint",
             args.header,
             multi_value=multi,
-            compact_every=args.compact_every or None,
+            compact_every=args.compact_every,
         )
         print(f"stream-ingested {args.vcf_dir} into {args.prefix}")
         return 0
@@ -887,17 +889,9 @@ def main(argv: list[str] | None = None) -> int:
             schema=args.schema,
             max_files_per_trigger=args.max_files_per_trigger,
         )
-        # a fresh/empty source fires zero batches: index/ holds only
-        # the _centroids sidecar, so report 0 instead of dying on a
-        # schema-less read (same contract as the other stream CLIs)
-        from vcfdbr_spark import fs as _cli_fs
-
-        batches = _cli_fs.list_subdirs(spark, f"{args.out}/index", "batch=")
-        n = (
-            spark.read.parquet(f"{args.out}/index").count()
-            if batches
-            else 0
-        )
+        n = read_stream_output(
+            spark, f"{args.out}/index", "vec_id long"
+        ).count()
         print(
             f"stream-ivf-assigned {args.vecs_dir}: "
             f"{n} vectors in index → {args.out}"
@@ -917,13 +911,7 @@ def main(argv: list[str] | None = None) -> int:
             max_files_per_trigger=args.max_files_per_trigger,
         )
         kept_dir = f"{args.out}/kept"
-        from vcfdbr_spark import fs as _fs
-
-        n = (
-            spark.read.option("basePath", kept_dir).parquet(kept_dir).count()
-            if _fs.exists(spark, kept_dir)
-            else 0
-        )
+        n = read_stream_output(spark, kept_dir, "doc_id long").count()
         print(f"stream-decontaminate: {n} docs kept → {kept_dir}")
         return 0
     if args.cmd == "stream-dedup":
@@ -938,18 +926,11 @@ def main(argv: list[str] | None = None) -> int:
             # None -> operator default; 0 falls through the falsy cap
             # check and disables
             max_bucket_size=args.max_bucket_size,
-            compact_every=args.compact_every or None,
+            compact_every=args.compact_every,
         )
-        # A fresh/empty source dir fires zero batches, so pairs/ never
-        # gets created — report zero instead of an AnalysisException.
-        from vcfdbr_spark import fs as _cli_fs
-
-        pairs_dir = f"{args.out}/pairs"
-        n = (
-            spark.read.parquet(pairs_dir).count()
-            if _cli_fs.exists(spark, pairs_dir)
-            else 0
-        )
+        n = read_stream_output(
+            spark, f"{args.out}/pairs", "a long, b long"
+        ).count()
         print(f"stream-deduped {args.docs_dir}: {n} candidate pairs → {args.out}")
         return 0
 
@@ -964,17 +945,12 @@ def main(argv: list[str] | None = None) -> int:
             text_col=args.text_col,
             max_files_per_trigger=args.max_files_per_trigger,
             n_pfx=args.n_pfx,
-            compact_every=args.compact_every or None,
+            compact_every=args.compact_every,
         )
-        from vcfdbr_spark import fs as _cli_fs
-
-        keep_dir = f"{args.out}/keep"
-        if _cli_fs.exists(spark, keep_dir):
-            kf = spark.read.parquet(keep_dir)
-            n = kf.count()
-            d = kf.filter("doc_id != keep_id").count()
-        else:
-            n = d = 0
+        kf = read_stream_output(
+            spark, f"{args.out}/keep", "doc_id long, keep_id long"
+        )
+        n, d = kf.count(), kf.filter("doc_id != keep_id").count()
         print(
             f"stream-exact-deduped {args.docs_dir}: {n} docs mapped, "
             f"{d} duplicates → {args.out}"
@@ -995,16 +971,11 @@ def main(argv: list[str] | None = None) -> int:
             max_files_per_trigger=args.max_files_per_trigger,
             n_pfx=args.n_pfx,
             max_bucket_size=args.max_bucket_size,
-            compact_every=args.compact_every or None,
+            compact_every=args.compact_every,
         )
-        from vcfdbr_spark import fs as _cli_fs
-
-        pairs_dir = f"{args.out}/pairs"
-        n = (
-            spark.read.parquet(pairs_dir).count()
-            if _cli_fs.exists(spark, pairs_dir)
-            else 0
-        )
+        n = read_stream_output(
+            spark, f"{args.out}/pairs", "a long, b long"
+        ).count()
         print(
             f"stream-semantic-deduped {args.vecs_dir}: "
             f"{n} candidate pairs → {args.out}"
@@ -1030,16 +1001,11 @@ def main(argv: list[str] | None = None) -> int:
             max_files_per_trigger=args.max_files_per_trigger,
             n_pfx=args.n_pfx,
             max_bucket_size=args.max_bucket_size,
-            compact_every=args.compact_every or None,
+            compact_every=args.compact_every,
         )
-        from vcfdbr_spark import fs as _cli_fs
-
-        kept_dir = f"{args.out}/kept"
-        n = (
-            spark.read.parquet(kept_dir).count()
-            if _cli_fs.exists(spark, kept_dir)
-            else 0
-        )
+        n = read_stream_output(
+            spark, f"{args.out}/kept", "doc_id long"
+        ).count()
         print(
             f"stream-corpus-filtered {args.docs_dir}: "
             f"{n} docs kept → {args.out}"

@@ -2894,16 +2894,6 @@ def _id_set_digest(df: DataFrame, col: str):
     )
 
 
-def _read_parquet_or_empty(spark, path: str, schema: str) -> DataFrame:
-    """Streaming writers skip output dirs when no batch produced rows
-    (pinned by test_cli_stream_dedup_empty_source) — read as an empty
-    frame instead of dying on the missing path."""
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], schema)
-
-
 def _pair_set_digest(df: DataFrame):
     """(n, digest) over an (a, b) pair set: md5 of 'a:b' elements
     joined in (a, b)-ascending order (struct sort_array = field-order
@@ -2971,6 +2961,7 @@ def q_stream_batch_parity(spark, sf_dir):
         adaptive_band_count,
     )
     from vcfdbr_spark.streaming.ingest import (
+        read_stream_output,
         stream_corpus_filter,
         stream_decontaminate,
         stream_semantic_dedup,
@@ -3006,7 +2997,7 @@ def q_stream_batch_parity(spark, sf_dir):
             f"{work}/de_out", jaccard_threshold=_DECONTAM_JACCARD,
             max_files_per_trigger=1,
         )
-        de_kept = _read_parquet_or_empty(
+        de_kept = read_stream_output(
             spark, f"{work}/de_out/kept", "doc_id long, text string"
         ).select("doc_id")
         return ("decon", *_id_set_digest(de_kept, "doc_id").first())
@@ -3025,7 +3016,7 @@ def q_stream_batch_parity(spark, sf_dir):
             bits=bits, n_bands=n_bands, max_files_per_trigger=1,
         )
         se_pairs = (
-            _read_parquet_or_empty(
+            read_stream_output(
                 spark, f"{work}/se_out/pairs", "a long, b long"
             )
             .select("a", "b")
@@ -3063,7 +3054,7 @@ def q_stream_batch_parity(spark, sf_dir):
             spark, f"{work}/cf_src/b=*/*.parquet", f"{work}/cf_out",
             max_files_per_trigger=1,
         )
-        cf_kept = _read_parquet_or_empty(
+        cf_kept = read_stream_output(
             spark, f"{work}/cf_out/kept", "doc_id long"
         ).select("doc_id")
         return ("cfilter", *_id_set_digest(cf_kept, "doc_id").first())

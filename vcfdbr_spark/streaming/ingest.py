@@ -14,6 +14,11 @@ continuing from an O(1) manifest carry (``_stream_progress.json``) —
 the exact analog of the reference's cross-chunk ``index_start`` carry
 (pipeline/02-build-db.R:258-259, :522).  The dedup streams keep their
 history in an ``operators.dedup.BandIndex``.
+
+The micro-batch sink protocol has one implementation each: every
+stream starts through :func:`_drain`, writes its per-batch
+``<root>/batch=N`` output through :func:`_write_batch_output`, and is
+read back through :func:`read_stream_output`.
 """
 
 from __future__ import annotations
@@ -21,6 +26,77 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from vcfdbr_spark import fs as _fs
+
+
+def _parquet_source(
+    spark: SparkSession, source_dir: str, schema: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    reader = spark.readStream.schema(schema).format("parquet")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.load(source_dir)
+
+
+def _drain(
+    source: DataFrame, checkpoint: str, write_batch, release=()
+) -> None:
+    """The one stream launcher: run ``write_batch(batch_df, batch_id)``
+    over everything ``source`` holds now (``Trigger.AvailableNow``,
+    the reference's ``--end-chunk``), offsets checkpointed at
+    ``checkpoint`` (its ``.progress.RData``), and wait for the drain.
+    ``release``: frames cached for the stream's life, unpersisted when
+    it ends — also when a batch raised, so a long-lived driver
+    restarting a failing stream does not accumulate them."""
+    try:
+        (
+            source.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        for df in release:
+            df.unpersist()
+
+
+def _write_batch_output(
+    spark: SparkSession, root: str, batch_id: int,
+    out: DataFrame | None = None, probe: bool = False,
+    partition_by: str | None = None,
+) -> None:
+    """The one writer of a stream's per-batch output ``<root>/batch=N``.
+
+    Delete-before-write: ``foreachBatch`` is at-least-once, and a
+    replayed batch replaces its own dir, so output is exactly-once.
+    A known-empty output writes NO dir: an empty write leaves a dir
+    without parquet files, and the next read of ``root`` dies with
+    UNABLE_TO_INFER_SCHEMA.  Emptiness comes from a check the caller
+    already runs — ``out=None`` after its own ``take(1)`` or pfx
+    probe, or ``probe=True`` when that check is ``out.take(1)`` — so
+    the writer adds no Spark action."""
+    path = f"{root}/batch={batch_id}"
+    _fs.delete_dir(spark, path)
+    if out is None or (probe and not out.take(1)):
+        return
+    w = out.write.partitionBy(partition_by) if partition_by else out.write
+    w.parquet(path)
+
+
+def read_stream_output(
+    spark: SparkSession, root: str, schema: str
+) -> DataFrame:
+    """The rows of every ``batch=N`` dir under a stream output ``root``
+    (:func:`_write_batch_output`'s layout), or zero rows of ``schema``
+    when the stream wrote none — a fresh or empty source fires no
+    batch, and empty outputs write no dir.  Any other read error
+    raises."""
+    if not _fs.list_subdirs(spark, root, "batch="):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(root)
 
 
 def stream_fuzzy_dedup(
@@ -208,7 +284,6 @@ def stream_exact_dedup(
     for unseen hashes, so the choice is deterministic, not
     arrival-order-dependent within a batch).
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.dedup import BandIndex
 
     index = BandIndex(spark, f"{out_dir}/hash_index", n_pfx)
@@ -216,13 +291,13 @@ def stream_exact_dedup(
     keep_dir = f"{out_dir}/keep"
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _fs.delete_dir(spark, f"{keep_dir}/batch={batch_id}")
         index.drop(batch_id)
         hashes = batch_df.select(
             "doc_id", F.md5(F.col(text_col)).alias("bucket")
         ).persist()
         pfxs = index.pfxs(hashes)
         if not pfxs:
+            _write_batch_output(spark, keep_dir, batch_id)
             hashes.unpersist()
             return
         batch_min = hashes.groupBy("bucket").agg(
@@ -251,7 +326,7 @@ def stream_exact_dedup(
             )
         resolved = resolved.persist()
         keep = hashes.join(resolved, "bucket").select("doc_id", "keep_id")
-        keep.write.parquet(f"{keep_dir}/batch={batch_id}")
+        _write_batch_output(spark, keep_dir, batch_id, keep)
         fresh = resolved.filter(F.col("_new")).select(
             F.col("keep_id").alias("doc_id"),
             F.lit(0).alias("band"),
@@ -265,17 +340,10 @@ def stream_exact_dedup(
         hashes.unpersist()
         index.fold(compact_every)
 
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _parquet_source(spark, source_dir, schema, max_files_per_trigger),
+        f"{out_dir}/_checkpoint", _write_batch,
     )
-    q.awaitTermination()
 
 
 def stream_sketch(
@@ -309,7 +377,6 @@ def stream_sketch(
 
     Read the current sketch with :func:`read_stream_sketch`.
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.sketch import kmv_bottom_k
 
     sk_dir = f"{out_dir}/sketch"
@@ -324,7 +391,6 @@ def stream_sketch(
         _fs.write_text(spark, f"{sk_dir}/_k", str(k))
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _fs.delete_dir(spark, f"{sk_dir}/batch={batch_id}")
         fresh = kmv_bottom_k(batch_df, value_col, k)
         prior_ids = sorted(
             int(d.rsplit("=", 1)[1])
@@ -334,37 +400,25 @@ def stream_sketch(
         if prior_ids:
             prev = spark.read.parquet(f"{sk_dir}/batch={prior_ids[-1]}")
             fresh = fresh.union(prev).distinct().orderBy("h").limit(k)
-        fresh.coalesce(1).write.parquet(f"{sk_dir}/batch={batch_id}")
+        _write_batch_output(spark, sk_dir, batch_id, fresh.coalesce(1))
         for old in prior_ids[:-1]:
             _fs.delete_dir(spark, f"{sk_dir}/batch={old}")
 
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _parquet_source(spark, source_dir, schema, max_files_per_trigger),
+        f"{out_dir}/_checkpoint", _write_batch,
     )
-    q.awaitTermination()
 
 
 def read_stream_sketch(spark: SparkSession, out_dir: str) -> tuple[DataFrame, int]:
     """(latest sketch frame, its k) from a :func:`stream_sketch`
-    state dir."""
-    from vcfdbr_spark import fs as _fs
-
+    state dir; a stream that has seen no batch has an empty sketch."""
     sk_dir = f"{out_dir}/sketch"
     k = int(_fs.read_text(spark, f"{sk_dir}/_k"))
-    ids = sorted(
-        int(d.rsplit("=", 1)[1])
-        for d in _fs.list_subdirs(spark, sk_dir, "batch=")
-    )
-    if not ids:
-        raise ValueError(f"no sketch batches under {sk_dir}")
-    return spark.read.parquet(f"{sk_dir}/batch={ids[-1]}"), k
+    batches = _fs.list_subdirs(spark, sk_dir, "batch=")
+    if not batches:
+        return spark.createDataFrame([], "h long"), k
+    return spark.read.parquet(batches[-1]), k
 
 
 def stream_ivf_assign(
@@ -395,7 +449,6 @@ def stream_ivf_assign(
     skew; the remedy is the familiar re-pin + rebuild: retrain,
     ``write_ivf_index`` over the accumulated vectors, restart.
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.similarity import ivf_assign
 
     idx_dir = f"{out_dir}/index"
@@ -421,32 +474,17 @@ def stream_ivf_assign(
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         vecs = batch_df.select("vec_id", "embedding")
-        _fs.delete_dir(spark, f"{idx_dir}/batch={batch_id}")
-        # empty micro-batch (zero-row shard): write NO batch dir — an
-        # empty partitioned write leaves a husk with no parquet files
-        # that breaks every later root read (same guard class as the
-        # banded core's bandless-batch rule)
-        if not vecs.take(1):
-            return
-        assign = ivf_assign(vecs, centroids=cents)
-        (
-            vecs.join(assign, "vec_id")
-            .write.partitionBy("cent_id")
-            .parquet(f"{idx_dir}/batch={batch_id}")
+        out = None
+        if vecs.take(1):
+            out = vecs.join(ivf_assign(vecs, centroids=cents), "vec_id")
+        _write_batch_output(
+            spark, idx_dir, batch_id, out, partition_by="cent_id"
         )
 
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _parquet_source(spark, source_dir, schema, max_files_per_trigger),
+        f"{out_dir}/_checkpoint", _write_batch, release=(cents,),
     )
-    q.awaitTermination()
-    cents.unpersist()
 
 
 def stream_corpus_filter(
@@ -505,7 +543,6 @@ def stream_corpus_filter(
     per-batch partitions written delete-before-write, so replays are
     exactly-once end to end.
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.dedup import (
         BandIndex,
         dedup_components,
@@ -543,12 +580,10 @@ def stream_corpus_filter(
 
     def keep_hook(batch_df, cross, inbatch, batch_id) -> None:
         surv = state.pop("surv")
-        _fs.delete_dir(spark, f"{kept_dir}/batch={batch_id}")
         if inbatch is None:
-            # bandless batch: every doc failed the gates (no
-            # survivors → nothing to keep) — an all-garbage shard
-            # writes NO kept partition (see the core's bandless-batch
-            # contract) and the stream moves on
+            # bandless batch: every doc failed the gates, nothing to
+            # keep
+            _write_batch_output(spark, kept_dir, batch_id)
             surv.unpersist()
             return
         drops = None
@@ -625,11 +660,7 @@ def stream_corpus_filter(
         # its lineage includes the per-batch components loop — without
         # the cache that loop's tail re-executes per consumer
         kept = surv.join(drops.distinct(), "doc_id", "left_anti").persist()
-        # write only a non-empty keep set: an empty partitioned dir
-        # has no parquet files and breaks later multi-dir reads (the
-        # stale dir was already deleted above, so replays agree)
-        if kept.take(1):
-            kept.write.parquet(f"{kept_dir}/batch={batch_id}")
+        _write_batch_output(spark, kept_dir, batch_id, kept, probe=True)
         kept.unpersist()
         surv.unpersist()
 
@@ -677,13 +708,10 @@ def _stream_banded_dedup(
     in-batch candidate pair frames SEPARATELY — an edge to history
     and an edge within the batch have different keep consequences.
     BOTH are ``None`` for a bandless batch (no pairs exist and no
-    index partition was written).  The hook must write its own
-    outputs delete-before-write into a ``batch=N`` partition — and
-    write NOTHING when its output is empty (an empty partitioned
-    dir breaks later multi-dir reads) — to keep the
+    index partition was written).  The hook writes its own per-batch
+    output through :func:`_write_batch_output`, which keeps the
     replay-exactly-once contract.
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.dedup import (
         DEFAULT_MAX_BUCKET_SIZE,
         band_probe_pairs,
@@ -709,13 +737,10 @@ def _stream_banded_dedup(
         pfxs = index.pfxs(bands)
         if not pfxs:
             # A bandless batch (empty file, or every doc gated out by
-            # a filtering make_bands) must write NO batch=N dirs: an
-            # empty partitioned write leaves a dir with no parquet
-            # files, and the next batch's basePath read of it dies
-            # with UNABLE_TO_INFER_SCHEMA.  Delete-stale keeps replays
-            # exactly-once; the hook still runs (with None pair
-            # frames) so its own per-batch output stays replay-clean.
-            _fs.delete_dir(spark, f"{pairs_dir}/batch={batch_id}")
+            # a filtering make_bands) writes no pairs and no index
+            # dir; the hook still runs (with None pair frames) so its
+            # own per-batch output stays replay-clean.
+            _write_batch_output(spark, pairs_dir, batch_id)
             index.drop(batch_id)
             if post_batch is not None:
                 post_batch(batch_df, None, None, batch_id)
@@ -749,19 +774,17 @@ def _stream_banded_dedup(
             if post_batch is not None:
                 inbatch = inbatch.persist()
             pairs = inbatch
-        _fs.delete_dir(spark, f"{pairs_dir}/batch={batch_id}")
         # the pairs and index writes are INDEPENDENT jobs over the
         # already-materialized band cache — submit them concurrently
         # (guide §2.6) so one small job's tail/commit back-fills the
         # other's
         from concurrent.futures import ThreadPoolExecutor
 
-        def _w_pairs():
-            pairs.write.parquet(f"{pairs_dir}/batch={batch_id}")
-
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [
-                pool.submit(_w_pairs),
+                pool.submit(
+                    _write_batch_output, spark, pairs_dir, batch_id, pairs
+                ),
                 pool.submit(index.append, bands, batch_id),
             ]
             # wait for BOTH writes and report every failure: raising
@@ -783,17 +806,10 @@ def _stream_banded_dedup(
         bands.unpersist()
         index.fold(compact_every)
 
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _parquet_source(spark, source_dir, schema, max_files_per_trigger),
+        f"{out_dir}/_checkpoint", _write_batch,
     )
-    q.awaitTermination()
 
 
 def stream_decontaminate(
@@ -826,7 +842,6 @@ def stream_decontaminate(
     write_band_index` layout (pfx-pruned probes); omitted, the band
     frame is built from ``eval_docs_path`` once at stream start.
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.operators.dedup import (
         minhash_band_buckets,
         minhash_signatures,
@@ -835,6 +850,7 @@ def stream_decontaminate(
     from vcfdbr_spark.operators.pipeline import decontaminate_batch
 
     eval_docs = spark.read.parquet(eval_docs_path)
+    release = ()
     if eval_index_dir is not None:
         eval_index = read_band_index(spark, eval_index_dir)
     else:
@@ -843,39 +859,23 @@ def stream_decontaminate(
         eval_index = minhash_band_buckets(
             minhash_signatures(eval_docs, text_col, id_col), id_col=id_col
         ).persist()
+        release = (eval_index,)
     keep_dir = f"{out_dir}/kept"
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _fs.delete_dir(spark, f"{keep_dir}/batch={batch_id}")
-        if not batch_df.take(1):
-            return
-        kept = decontaminate_batch(
-            batch_df, eval_docs, eval_index=eval_index,
-            jaccard_threshold=jaccard_threshold,
-            text_col=text_col, id_col=id_col,
-        )
-        # empty batch=N dirs break later multi-dir reads — write only
-        # when survivors exist (mirrors the banded core's contract)
-        if kept.take(1):
-            kept.write.parquet(f"{keep_dir}/batch={batch_id}")
+        kept = None
+        if batch_df.take(1):
+            kept = decontaminate_batch(
+                batch_df, eval_docs, eval_index=eval_index,
+                jaccard_threshold=jaccard_threshold,
+                text_col=text_col, id_col=id_col,
+            )
+        _write_batch_output(spark, keep_dir, batch_id, kept, probe=True)
 
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _parquet_source(spark, source_dir, schema, max_files_per_trigger),
+        f"{out_dir}/_checkpoint", _write_batch, release=release,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        # release even when a micro-batch fails — a long-lived driver
-        # restarting a failing stream must not accumulate eval indexes
-        if eval_index_dir is None:
-            eval_index.unpersist()
 
 
 def _finalize_stream_store(
@@ -895,12 +895,9 @@ def _finalize_stream_store(
     from vcfdbr_spark.sources.vcf import build_metadata
 
     write_small(out_dir, *build_metadata(spark, header))
-    try:
-        impact = spark.read.parquet(f"{out_dir}/variant_impact")
-    except Exception:
-        impact = None  # no CSQ in this VCF → no impact table
-    if impact is not None:
-        write_gene_map(out_dir, impact)
+    impact_dir = f"{out_dir}/variant_impact"
+    if _fs.exists(spark, impact_dir):  # no CSQ in this VCF → no table
+        write_gene_map(out_dir, spark.read.parquet(impact_dir))
     write_manifest(spark, out_dir, layout)
 
 
@@ -931,7 +928,6 @@ def _compact_stream_table(
     compaction (same model as the band-index fold); ``compact_every``
     amortizes it — raise it for very long streams.
     """
-    from vcfdbr_spark import fs as _fs
     from vcfdbr_spark.sources.store import write_table
 
     table_path = f"{out_dir}/{table}"
@@ -1040,8 +1036,6 @@ def stream_vcf_ingest(
             header_path, header, probe_rows, multi_value
         )
 
-    from vcfdbr_spark import fs as _fs
-
     # progress manifest lives NEXT TO the (possibly hdfs://-s3a://)
     # store output, so it goes through the Hadoop FS, not local open()
     progress_path = f"{out_dir}/_stream_progress.json"
@@ -1117,12 +1111,6 @@ def stream_vcf_ingest(
             for t in _STREAM_TABLES:
                 _compact_stream_table(spark_l, out_dir, t, batch_id, layout)
 
-    q = (
-        records.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(records, checkpoint_dir, _write_batch)
     if finalize:
         _finalize_stream_store(spark, out_dir, header, layout)
