@@ -917,6 +917,36 @@ def test_cli_emb_index_probe_append_and_guards(spark, tmp_path):
         ).count()
 
 
+def test_cli_decontaminate_eval_index_keeps_in_memory_rows(spark, tmp_path):
+    """`vcfdb dedup-index --n-pfx 128` then `vcfdb decontaminate
+    --eval-index` keeps exactly the rows that the run which bands the
+    eval docs in memory keeps: the probe prunes under the index's
+    recorded modulus."""
+    eval_docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text").orderBy("doc_id").limit(200)
+    )
+    batch = eval_docs.select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"),
+        F.concat("text", F.lit(" zz")).alias("text"),
+    )
+    eval_p, batch_p = str(tmp_path / "eval"), str(tmp_path / "batch")
+    eval_docs.write.parquet(eval_p)
+    batch.write.parquet(batch_p)
+    idx = str(tmp_path / "idx")
+    assert cli_main(
+        ["dedup-index", "--docs", eval_p, "--out", idx, "--n-pfx", "128"]
+    ) == 0
+    args = ["decontaminate", "--batch", batch_p, "--eval-docs", eval_p]
+    assert cli_main(args + ["--eval-index", idx, "--out", str(tmp_path / "k1")]) == 0
+    assert cli_main(args + ["--out", str(tmp_path / "k2")]) == 0
+
+    def kept(out):
+        return {r["doc_id"] for r in spark.read.parquet(str(tmp_path / out)).collect()}
+
+    assert kept("k1") == kept("k2")
+
+
 def test_cli_training_data_subcommands(spark, tmp_path, capsys):
     """domain-mix / epoch-shuffle / snapshot-delta / decontaminate
     drive their operators end-to-end and report sane summaries."""

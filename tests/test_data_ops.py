@@ -397,6 +397,33 @@ def test_kmv_overlap_identical_disjoint_and_estimator(spark):
     assert abs(got["containment_a"] - 40 / 120) < 0.25
 
 
+def test_kmv_overlap_empty_side_gives_zero_overlap(spark):
+    """An empty side (one or both) gives a zero-overlap row from
+    kmv_overlap and kmv_overlap_sketches instead of DIVIDE_BY_ZERO:
+    Jaccard, intersection and containments 0, merged_k the filled
+    slots."""
+    from vcfdbr_spark.operators.sketch import (
+        kmv_bottom_k,
+        kmv_overlap,
+        kmv_overlap_sketches,
+    )
+
+    k = 16
+    full = spark.createDataFrame([(f"t {i}",) for i in range(40)], "text string")
+    empty = full.limit(0)
+    for a, b, merged_k in ((full, empty, k), (empty, full, k), (empty, empty, 0)):
+        for r in (
+            kmv_overlap(a, b, "text", k=k).first(),
+            kmv_overlap_sketches(
+                kmv_bottom_k(a, "text", k), kmv_bottom_k(b, "text", k), k
+            ).first(),
+        ):
+            assert r["merged_k"] == merged_k
+            assert r["kmv_jaccard"] == 0.0
+            assert r["kmv_intersection"] == 0
+            assert r["containment_a"] == 0.0 and r["containment_b"] == 0.0
+
+
 def test_quality_prune_partition_invariant(spark):
     """Two-phase per-group top-fraction prune returns the same rows
     as the naive global window on any input partitioning, and the
@@ -641,7 +668,7 @@ def test_band_index_pruned_probe_equivalence(spark, tmp_path):
     }
     pruned = {
         (r["a"], r["b"])
-        for r in incremental_dedup_pairs(new, stored, n_pfx=16).collect()
+        for r in incremental_dedup_pairs(new, stored).collect()
     }
     assert pruned == flat and flat  # identical pairs, non-empty
 
@@ -651,7 +678,7 @@ def test_band_index_pruned_probe_equivalence(spark, tmp_path):
     # on the probe path — the probe stays map-side
     new_bands = minhash_band_buckets(minhash_signatures(new)).persist()
     try:
-        probe = band_probe_pairs(new_bands, stored, n_pfx=16)
+        probe = band_probe_pairs(new_bands, stored)
         plan = formatted_plan(probe)
         assert "PartitionFilters" in plan
         pf = [

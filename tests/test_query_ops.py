@@ -238,6 +238,26 @@ def test_gene_map_empty_string_normalized(spark, tmp_path):
     assert "" not in vals
 
 
+def test_write_gene_map_failure_keeps_old_map(spark, tmp_path, monkeypatch):
+    """A gene_map rewrite whose write job fails leaves the old map
+    readable with its old rows."""
+    from vcfdbr_spark.sources import store
+
+    vcf = write_vcf(str(tmp_path / "toy.vcf"))
+    path = str(tmp_path / "store")
+    write_vcfdb(read_vcf(spark, vcf), path, mode="table")
+    before = sorted(map(tuple, spark.read.parquet(f"{path}/gene_map").collect()))
+    impact = spark.read.parquet(f"{path}/variant_impact")
+    monkeypatch.setattr(
+        store, "build_gene_map",
+        lambda imp: imp.select(F.assert_true(F.lit(False)).alias("x")),
+    )
+    with pytest.raises(Exception):
+        store.write_gene_map(path, impact)
+    after = sorted(map(tuple, spark.read.parquet(f"{path}/gene_map").collect()))
+    assert before and after == before
+
+
 def test_sql_surface_over_store(db):
     """Reference parity: the built store answers plain SQL (the
     reference's thin query model — users write SQL, no bespoke API)."""

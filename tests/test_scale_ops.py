@@ -1175,6 +1175,65 @@ def test_decontaminate_batch_probe_matches_in_memory_and_pfx_index(spark, tmp_pa
     assert out2 == out1
 
 
+@pytest.mark.parametrize("n_pfx", [16, 128])
+def test_read_band_index_probes_under_its_recorded_modulus(spark, tmp_path, n_pfx):
+    """A probe of a read_band_index layout prunes under the modulus
+    the layout recorded, not the default one: band_probe_pairs and
+    decontaminate_batch against it equal the in-memory index, for the
+    whole batch and for its first document alone.  A stored frame
+    whose pfx column carries no modulus raises instead of pruning
+    under a guessed one."""
+    from vcfdbr_spark.operators.dedup import (
+        band_probe_pairs,
+        minhash_band_buckets,
+        minhash_signatures,
+        read_band_index,
+        write_band_index,
+    )
+    from vcfdbr_spark.operators.pipeline import decontaminate_batch
+
+    # eval: the first 200 sf0.001 documents; batch: their " zz" copies
+    eval_docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text").orderBy("doc_id").limit(200)
+    )
+    batch = eval_docs.select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"),
+        F.concat("text", F.lit(" zz")).alias("text"),
+    )
+    in_memory = minhash_band_buckets(minhash_signatures(eval_docs))
+    idx = str(tmp_path / "idx")
+    write_band_index(in_memory, idx, n_pfx=n_pfx)
+    stored = read_band_index(spark, idx)
+    for b in (batch, batch.orderBy("doc_id").limit(1)):
+        bands = minhash_band_buckets(minhash_signatures(b)).persist()
+        try:
+            def pairs(index):
+                return {
+                    (r["a"], r["b"])
+                    for r in band_probe_pairs(
+                        bands, index, self_pairs=False
+                    ).collect()
+                }
+
+            want = pairs(in_memory)
+            assert want and pairs(stored) == want
+        finally:
+            bands.unpersist()
+
+        def kept(index):
+            return {
+                r["doc_id"]
+                for r in decontaminate_batch(
+                    b, eval_docs, eval_index=index
+                ).collect()
+            }
+
+        assert kept(stored) == kept(in_memory)
+    with pytest.raises(ValueError, match="read_band_index"):
+        band_probe_pairs(in_memory, spark.read.parquet(idx))
+
+
 def test_pack_shuffled_is_decorrelated_and_parallel(spark):
     """Packs mix non-adjacent ids (vs pack_sequences' id-adjacent
     packs); offsets are a correct per-bucket cumsum in order_key

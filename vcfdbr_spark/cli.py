@@ -1102,13 +1102,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "dedup-probe":
         from vcfdbr_spark.operators.dedup import (
             DEFAULT_MAX_BUCKET_SIZE,
-            DEFAULT_N_PFX,
+            BandIndex,
             band_probe_pairs,
-            index_n_pfx,
             minhash_band_buckets,
             minhash_signatures,
-            read_band_index,
-            write_band_index,
         )
 
         cap = (
@@ -1116,29 +1113,21 @@ def main(argv: list[str] | None = None) -> int:
             if args.max_bucket_size is None
             else (args.max_bucket_size or None)
         )
-        # modulus resolution: explicit flag > index sidecar > default;
-        # read_band_index raises when an explicit flag contradicts the
-        # sidecar (a mismatched modulus prunes the wrong partitions)
-        n_pfx = (
-            args.n_pfx
-            or index_n_pfx(spark, args.index)
-            or DEFAULT_N_PFX
-        )
         new_docs = spark.read.parquet(args.docs)
-        index = read_band_index(spark, args.index, n_pfx=n_pfx)
+        # opening raises when an explicit --n-pfx contradicts the
+        # index's recorded modulus; the probe and the append use it
+        index = BandIndex(spark, args.index, args.n_pfx)
         # sign the batch ONCE: the persisted band frame feeds the
         # probe, the new-new self-join AND the optional index append;
         # both caches are released before return (zero net cache)
         bands = minhash_band_buckets(minhash_signatures(new_docs)).persist()
         pairs = band_probe_pairs(
-            bands, index, n_pfx=n_pfx, max_bucket_size=cap
+            bands, index.read(), max_bucket_size=cap
         ).persist()
         pairs.write.mode("overwrite").parquet(args.out)
         n = pairs.count()
         if args.append_index:
-            write_band_index(
-                bands, args.index, n_pfx=n_pfx, mode="append"
-            )
+            index.extend(bands)
         pairs.unpersist()
         bands.unpersist()
         print(f"probed {args.docs} vs {args.index}: {n} pairs → {args.out}")
@@ -1186,10 +1175,6 @@ def main(argv: list[str] | None = None) -> int:
         pairs.write.mode("overwrite").parquet(args.out)
         n = pairs.count()
         if args.append_index:
-            from vcfdbr_spark.operators.dedup import (
-                DEFAULT_N_PFX,
-                index_n_pfx,
-            )
             from vcfdbr_spark.operators.similarity import (
                 embedding_band_index,
             )
@@ -1198,9 +1183,7 @@ def main(argv: list[str] | None = None) -> int:
                 embedding_band_index(
                     new_vecs, args.threshold, bits=bits, n_bands=n_bands
                 ),
-                args.index, bits, n_bands,
-                n_pfx=index_n_pfx(spark, args.index) or DEFAULT_N_PFX,
-                mode="append",
+                args.index, bits, n_bands, mode="append",
             )
         pairs.unpersist()
         print(

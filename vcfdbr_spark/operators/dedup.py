@@ -735,21 +735,32 @@ def band_pfx(bucket, n_pfx: int = DEFAULT_N_PFX):
     Purely a storage-layout key (never part of the result), so the
     engine-native murmur hash is fine — the index is written and
     probed by the same engine.  Writer and prober must agree on
-    ``n_pfx``; :func:`write_band_index` records it in an ``_n_pfx``
-    sidecar next to the partitions, :func:`index_n_pfx` reads it back,
-    and :func:`read_band_index` / append-mode writes raise on a
-    mismatch — a silently different modulus would prune the WRONG
-    ``pfx=`` partitions and drop near-dup candidate pairs.
+    ``n_pfx``: :class:`BandIndex` records it with every layout it
+    writes and tags the ``pfx`` column of every frame it reads with
+    it, and :func:`band_probe_pairs` prunes under that modulus — a
+    silently different one would prune the WRONG ``pfx=`` partitions
+    and drop near-dup candidate pairs.
     """
     return F.pmod(F.hash(bucket), F.lit(n_pfx))
 
 
+def _pfx_list(bands: DataFrame, n_pfx: int) -> list:
+    """The distinct ``pfx`` values of ``bands``' buckets under
+    ``n_pfx``, in one collect bounded by ``n_pfx`` ints.  ``band_pfx``
+    of a NULL bucket is still non-null, so the list is empty exactly
+    when ``bands`` is."""
+    return [
+        r[0]
+        for r in bands.select(band_pfx(F.col("bucket"), n_pfx).alias("p"))
+        .distinct()
+        .collect()
+    ]
+
+
 def index_n_pfx(spark, path: str) -> int | None:
     """The ``n_pfx`` a :func:`write_band_index` layout was written
-    with (from its ``_n_pfx`` sidecar); ``None`` for a pre-sidecar or
-    foreign layout."""
-    raw = _fs.read_text(spark, f"{path}/_n_pfx")
-    return int(raw.strip()) if raw else None
+    with; ``None`` for a pre-sidecar or foreign layout."""
+    return BandIndex._sidecars(spark, path)[0]
 
 
 def write_band_index(
@@ -769,92 +780,58 @@ def write_band_index(
     forces every probe to scan the whole accumulated index — O(index)
     per batch, the scale-killer this layout exists to remove.)
 
-    The modulus is recorded in a ``_n_pfx`` sidecar (underscore prefix
-    → invisible to parquet reads).  ``mode="append"`` VALIDATES the
-    sidecar first and raises on mismatch: appending under a different
-    modulus would mix layouts and silently break probe pruning.
-
-    File-count shape (r14): the frame is hash-REPARTITIONED on ``pfx``
-    before the dynamic-partition write, so each ``pfx=`` dir receives
-    its rows from ONE task → ≤ ``n_pfx`` files per write.  Without it
-    every upstream task opens a writer per pfx it touches — T×n_pfx
-    tiny files per write (measured 32×64 = up to 2,048 files per
-    micro-batch at sf0.1, and the per-batch index write was 50 s of
-    file-create/close stall for 5,000 rows).  Probes pay the same bill
-    again at read time: the accumulated layout's file count is what
-    every later scan lists and tasks over.  The added exchange is
-    O(batch band rows) of narrow columns — the classic §6 trade
-    (fewer, larger files) at micro-batch granularity.  ``pfx`` is a
-    deterministic function of ``bucket``, so retried map tasks
-    reproduce the same row→partition assignment.
+    :class:`BandIndex` writes it (:meth:`BandIndex.put`).
+    ``mode="append"`` opens the existing layout first, which raises
+    when ``n_pfx`` differs from the recorded modulus.
     """
-    spark = bands.sparkSession
-    stored = index_n_pfx(spark, path)
-    if mode == "append" and stored is not None and stored != n_pfx:
-        raise ValueError(
-            f"band index at {path} was written with n_pfx={stored}; "
-            f"appending with n_pfx={n_pfx} would mix partition moduli "
-            f"and silently drop candidate pairs at probe time"
-        )
-    (
-        bands.withColumn("pfx", band_pfx(F.col("bucket"), n_pfx))
-        .repartition("pfx")
-        .write.mode(mode)
-        .partitionBy("pfx")
-        .parquet(path)
-    )
-    # A non-append write (overwrite) DELETES the target dir — sidecar
-    # included — so it must be rewritten even when stored == n_pfx, or
-    # a same-modulus rebuild silently strips the probe's mismatch guard.
-    if mode != "append" or stored != n_pfx:
-        _fs.write_text(spark, f"{path}/_n_pfx", str(n_pfx))
+    if mode == "append":
+        BandIndex(bands.sparkSession, path, n_pfx).extend(bands)
+    else:
+        BandIndex.put(bands, path, n_pfx, mode=mode)
 
 
 def read_band_index(spark, path: str, n_pfx: int | None = None) -> DataFrame:
-    """Open a :func:`write_band_index` layout; the ``pfx`` partition
-    column rides along so :func:`band_probe_pairs` can prune on it.
-
-    Pass the ``n_pfx`` you intend to probe with to have it validated
-    against the layout's ``_n_pfx`` sidecar — a mismatched modulus
-    prunes the wrong partitions and silently loses pairs."""
-    stored = index_n_pfx(spark, path)
-    if n_pfx is not None and stored is not None and stored != n_pfx:
-        raise ValueError(
-            f"band index at {path} was written with n_pfx={stored}, "
-            f"but the probe requested n_pfx={n_pfx}; probing with a "
-            f"different modulus prunes the wrong pfx= partitions. "
-            f"Re-probe with n_pfx={stored} or rebuild the index."
-        )
-    return spark.read.parquet(path)
+    """Open a :func:`write_band_index` layout (:meth:`BandIndex.read`);
+    its ``pfx`` column carries the recorded modulus, which
+    :func:`band_probe_pairs` prunes under.  A given ``n_pfx`` that
+    conflicts with the recorded one raises."""
+    return BandIndex(spark, path, n_pfx).read()
 
 
 class BandIndex:
-    """A streaming band index: the one implementation of its layout,
-    its sidecar guards, the history read, the per-batch append and the
-    fold.
+    """The one owner of the stored band-index protocol: the layout,
+    its sidecars and their guards, for the static layouts
+    (:func:`write_band_index`, ``similarity.write_embedding_band_index``,
+    :func:`compact_band_index`'s output) and the streaming one, plus
+    the stream's history read, per-batch append and fold.
 
-    Layout: one :func:`write_band_index` tail dir per micro-batch at
-    ``<root>/batch=N/pfx=M/``, plus at most one folded layout at
-    ``<root>_compacted``.  A fold rewrites ``<root>_compacted`` by
-    :func:`vcfdbr_spark.fs.swap_dir` (its docstring states the crash
-    windows; :meth:`history` reads a half-swapped layout through
-    :func:`~vcfdbr_spark.fs.swapped_dir`), then deletes the folded
-    tail dirs.  A crash before those deletes leaves tail dirs that
-    were already folded: duplicate rows, harmless, because probe
-    output is distinct and the next fold's ``distinct`` drops them.
+    Layout: ``pfx=M/`` parquet dirs written by :meth:`put`.  A static
+    index is one layout at its root; a streaming one holds a tail
+    layout per micro-batch at ``<root>/batch=N/`` plus at most one
+    folded layout at ``<root>_compacted``.  A fold rewrites
+    ``<root>_compacted`` by :func:`vcfdbr_spark.fs.swap_dir` (its
+    docstring states the crash windows; :meth:`history` reads a
+    half-swapped layout through :func:`~vcfdbr_spark.fs.swapped_dir`),
+    then deletes the folded tail dirs.  A crash before those deletes
+    leaves tail dirs that were already folded: duplicate rows,
+    harmless, because probe output is distinct and the next fold's
+    ``distinct`` drops them.
 
-    Sidecars: ``<root>/_n_pfx`` records the partition modulus baked
-    into every ``pfx=`` dir, and ``<root>/_band_params`` the optional
-    pinned banding parameters (a semantic stream's ``bits`` and
-    ``n_bands``).  Opening validates both, because a stream restarted
-    with a different modulus would prune the wrong dirs, and one
-    restarted with different band parameters would band new batches
-    into a different bucket space; either silently loses candidate
-    pairs.  An explicit value that conflicts with the recorded one
-    raises; an omitted one (``None``) resumes with the recorded value.
-    Opening writes nothing (a manual compaction stays read-only on the
-    stream's directory); :meth:`record` writes the sidecars a new
-    stream lacks, and folds carry both to the compacted layout.
+    Sidecars: ``_n_pfx`` records the partition modulus baked into
+    every ``pfx=`` dir, and ``_band_params`` the optional pinned
+    banding parameters (an embedding index's ``bits`` and
+    ``n_bands``).  Opening validates both, because a different
+    modulus prunes the wrong dirs and different band parameters band
+    new rows into a different bucket space; either silently loses
+    candidate pairs.  An explicit value that conflicts with the
+    recorded one raises; an omitted one (``None``) resumes with the
+    recorded value (``n_pfx``: :data:`DEFAULT_N_PFX` when none is
+    recorded).  Opening writes nothing (a manual compaction stays
+    read-only on the stream's directory); :meth:`record` writes the
+    sidecars a new stream lacks, and :meth:`put` writes them with
+    every layout.  The frames this reads (:meth:`read`,
+    :meth:`history`) carry the modulus in their ``pfx`` column's
+    metadata, where :func:`band_probe_pairs` takes it from.
     """
 
     def __init__(
@@ -867,34 +844,83 @@ class BandIndex:
         self.spark = spark
         self.root = root.rstrip("/")
         self.compacted = f"{self.root}_compacted"
-        stored = index_n_pfx(spark, self.root)
+        stored, pinned = self._sidecars(spark, self.root)
         if n_pfx is None:
             n_pfx = DEFAULT_N_PFX if stored is None else stored
         elif stored is not None and stored != n_pfx:
             raise ValueError(
-                f"stream index at {self.root} was built with "
-                f"n_pfx={stored}; restarting with n_pfx={n_pfx} would "
-                f"mix partition moduli"
+                f"band index at {self.root} was written with "
+                f"n_pfx={stored}; n_pfx={n_pfx} would mix partition "
+                f"moduli and prune the wrong pfx= partitions. Omit "
+                f"n_pfx to use the recorded one, or rebuild the index."
             )
         self.n_pfx = n_pfx
         self._n_pfx_recorded = stored is not None
-        raw = _fs.read_text(spark, f"{self.root}/_band_params")
-        pinned = json.loads(raw) if raw else None
         if pinned is not None and params is not None:
-            params = {k: pinned[k] if v is None else v for k, v in params.items()}
-            if params != {k: pinned[k] for k in params}:
+            params = {k: pinned.get(k) if v is None else v for k, v in params.items()}
+            if any(pinned.get(k, v) != v for k, v in params.items()):
                 raise ValueError(
-                    f"stream index at {self.root} is pinned at "
-                    + ", ".join(f"{k}={pinned[k]}" for k in params)
-                    + f"; restarting with {tuple(params.values())} would "
-                    f"band new batches into a different bucket space and "
-                    f"silently lose candidate pairs"
+                    f"band index at {self.root} is pinned at "
+                    + ", ".join(f"{k}={pinned[k]}" for k in params if k in pinned)
+                    + f"; {tuple(params.values())} would band new rows "
+                    f"into a different bucket space and silently lose "
+                    f"candidate pairs"
                 )
         self.params = pinned if params is None else dict(params)
         self._params_recorded = pinned is not None
 
+    @staticmethod
+    def _sidecars(spark, path: str) -> tuple[int | None, dict | None]:
+        """The recorded ``(n_pfx, band params)`` of the layout at
+        ``path``; ``None`` for each one that is absent."""
+        raw = _fs.read_text(spark, f"{path}/_n_pfx")
+        n_pfx = int(raw.strip()) if raw else None
+        raw = _fs.read_text(spark, f"{path}/_band_params")
+        return n_pfx, json.loads(raw) if raw else None
+
+    @staticmethod
+    def put(
+        bands: DataFrame,
+        path: str,
+        n_pfx: int | None = None,
+        params: dict | None = None,
+        mode: str = "overwrite",
+    ) -> None:
+        """The one layout writer: ``bands`` hive-partitioned by ``pfx``
+        under modulus ``n_pfx`` (default :data:`DEFAULT_N_PFX`) at
+        ``path``, then the ``_n_pfx`` sidecar and, given ``params``,
+        the ``_band_params`` one.  A non-append write DELETES the
+        target dir, sidecars included, so both are always rewritten.
+
+        File-count shape (r14): the frame is hash-REPARTITIONED on
+        ``pfx`` before the dynamic-partition write, so each ``pfx=``
+        dir receives its rows from ONE task → ≤ ``n_pfx`` files per
+        write.  Without it every upstream task opens a writer per pfx
+        it touches — T×n_pfx tiny files per write (measured 32×64 = up
+        to 2,048 files per micro-batch at sf0.1, and the per-batch
+        index write was 50 s of file-create/close stall for 5,000
+        rows).  Probes pay the same bill again at read time: the
+        accumulated layout's file count is what every later scan lists
+        and tasks over.  The added exchange is O(batch band rows) of
+        narrow columns — the classic §6 trade (fewer, larger files) at
+        micro-batch granularity.  ``pfx`` is a deterministic function
+        of ``bucket``, so retried map tasks reproduce the same
+        row→partition assignment."""
+        spark = bands.sparkSession
+        n_pfx = DEFAULT_N_PFX if n_pfx is None else n_pfx
+        (
+            bands.withColumn("pfx", band_pfx(F.col("bucket"), n_pfx))
+            .repartition("pfx")
+            .write.mode(mode)
+            .partitionBy("pfx")
+            .parquet(path)
+        )
+        _fs.write_text(spark, f"{path}/_n_pfx", str(n_pfx))
+        if params is not None:
+            _fs.write_text(spark, f"{path}/_band_params", json.dumps(params))
+
     def record(self) -> None:
-        """Write the sidecars this index has not recorded yet."""
+        """Write the root sidecars this index has not recorded yet."""
         if not self._n_pfx_recorded:
             _fs.write_text(self.spark, f"{self.root}/_n_pfx", str(self.n_pfx))
             self._n_pfx_recorded = True
@@ -904,6 +930,29 @@ class BandIndex:
                 json.dumps(self.params),
             )
             self._params_recorded = True
+
+    def pinned(self) -> dict:
+        """The pinned band parameters; raises when there are none."""
+        if self.params is None:
+            raise ValueError(
+                f"band index at {self.root} has no _band_params sidecar; "
+                f"rebuild it with write_embedding_band_index (probing "
+                f"with re-derived parameters can silently lose pairs)"
+            )
+        return self.params
+
+    def _tagged(self, frame: DataFrame) -> DataFrame:
+        return frame.withMetadata("pfx", {"n_pfx": self.n_pfx})
+
+    def read(self) -> DataFrame:
+        """The static layout at the root, ``pfx`` tagged with its
+        modulus."""
+        return self._tagged(self.spark.read.parquet(self.root))
+
+    def extend(self, bands: DataFrame) -> None:
+        """Append ``bands`` to the static layout at the root, under the
+        modulus and band parameters this index opened with."""
+        self.put(bands, self.root, self.n_pfx, self.params, mode="append")
 
     def tail(self, exclude_batch: int | None = None) -> list[str]:
         """The ``batch=N`` tail dirs, minus ``exclude_batch``'s own."""
@@ -925,22 +974,13 @@ class BandIndex:
         )
 
     def pfxs(self, bands: DataFrame) -> list:
-        """The distinct ``pfx`` values of ``bands``' buckets, in one
-        collect bounded by ``n_pfx`` ints.  Doubles as the batch's
-        emptiness probe: ``band_pfx`` of a NULL bucket is still
-        non-null, so the list is empty exactly when ``bands`` is."""
-        return [
-            r[0]
-            for r in bands.select(
-                band_pfx(F.col("bucket"), self.n_pfx).alias("p")
-            )
-            .distinct()
-            .collect()
-        ]
+        """:func:`_pfx_list` under this index's modulus; doubles as the
+        batch's emptiness probe."""
+        return _pfx_list(bands, self.n_pfx)
 
     def history(self, exclude_batch: int | None = None) -> DataFrame | None:
         """Every indexed row except batch ``exclude_batch``'s own, with
-        its ``pfx`` column; ``None`` when nothing is indexed.
+        its tagged ``pfx`` column; ``None`` when nothing is indexed.
 
         Reads the compacted layout (or its ``.old`` while a fold's
         swap is half done) unioned with the tail.  A replayed batch
@@ -961,7 +1001,7 @@ class BandIndex:
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
-        return out
+        return self._tagged(out)
 
     def drop(self, batch_id: int) -> None:
         """Delete batch ``batch_id``'s tail dir, if any."""
@@ -979,14 +1019,6 @@ class BandIndex:
             mode="errorifexists",
         )
 
-    def write(self, bands: DataFrame, path: str, n_pfx: int | None = None) -> None:
-        """Write ``bands`` as one :func:`write_band_index` layout at
-        ``path`` (modulus ``n_pfx``, default this index's), carrying
-        the pinned band parameters."""
-        write_band_index(bands, path, n_pfx=self.n_pfx if n_pfx is None else n_pfx)
-        if self.params is not None:
-            _fs.write_text(self.spark, f"{path}/_band_params", json.dumps(self.params))
-
     def fold(self, every: int | None) -> None:
         """Once the tail holds ``every`` dirs (``None`` never), fold it
         and the compacted layout into a new compacted layout."""
@@ -1001,7 +1033,7 @@ class BandIndex:
             bands = self._read_tail(tail)
             if _fs.exists(spark, comp):
                 bands = bands.unionByName(spark.read.parquet(comp))
-            self.write(bands.drop("pfx").distinct(), tmp)
+            self.put(bands.drop("pfx").distinct(), tmp, self.n_pfx, self.params)
 
         _fs.swap_dir(spark, comp, write)
         for d in tail:
@@ -1028,7 +1060,7 @@ def compact_band_index(
     Works on BOTH stream flavors: the id column (``doc_id`` for the
     MinHash text stream, ``vec_id`` for the sign-LSH embedding
     stream) is inferred from the layout rather than assumed, and a
-    semantic index's ``_band_params`` sidecar is carried to the
+    semantic index's pinned band parameters are carried to the
     output so probes against the compacted index keep the pinned
     band-width guard.
     """
@@ -1045,8 +1077,9 @@ def compact_band_index(
             f"band index layout has ambiguous id columns {ids}; "
             f"expected exactly one besides (band, bucket)"
         )
-    index.write(
-        bands.select(ids[0], "band", "bucket").distinct(), out_dir, n_pfx=n_pfx
+    index.put(
+        bands.select(ids[0], "band", "bucket").distinct(), out_dir, n_pfx,
+        index.params,
     )
     return spark.read.parquet(out_dir).count()
 
@@ -1060,7 +1093,6 @@ def incremental_dedup_pairs(
     shingle_n: int = 3,
     max_words: int = 50,
     rows_per_band: int = 2,
-    n_pfx: int = DEFAULT_N_PFX,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     stats: dict | None = None,
     materialize: bool = True,
@@ -1079,10 +1111,10 @@ def incremental_dedup_pairs(
     Scale shape: the new batch's band frame is tiny relative to the
     index, so AQE broadcasts it and the probe is a map-side join over
     the index scan — the index is never shuffled.  When ``index`` came
-    from :func:`write_band_index` (it carries a ``pfx`` partition
-    column) the probe additionally PRUNES index partitions to the new
-    batch's own bucket prefixes, so probe I/O is O(batch spread), not
-    O(index).
+    from :func:`read_band_index` (it carries a tagged ``pfx``
+    partition column) the probe additionally PRUNES index partitions
+    to the new batch's own bucket prefixes, so probe I/O is O(batch
+    spread), not O(index).
 
     ``materialize`` (default True) persists the batch's band frame —
     it feeds ~6 plan subtrees (hot-bucket list, anti-join side,
@@ -1104,8 +1136,7 @@ def incremental_dedup_pairs(
     if materialize:
         new_b = new_b.persist()
     return band_probe_pairs(
-        new_b, index, id_col, n_pfx=n_pfx,
-        max_bucket_size=max_bucket_size, stats=stats,
+        new_b, index, id_col, max_bucket_size=max_bucket_size, stats=stats
     )
 
 
@@ -1113,7 +1144,6 @@ def band_probe_pairs(
     new_bands: DataFrame,
     index: DataFrame,
     id_col: str = "doc_id",
-    n_pfx: int = DEFAULT_N_PFX,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     stats: dict | None = None,
     self_pairs: bool = True,
@@ -1124,16 +1154,17 @@ def band_probe_pairs(
     by :func:`incremental_dedup_pairs` and the streaming fuzzy dedup.
     Caller persists ``new_bands`` (it feeds both joins).
 
-    When the index carries a ``pfx`` partition column (the
-    :func:`write_band_index` layout) the probe first collects the new
-    batch's DISTINCT bucket prefixes — a driver-bounded set (≤
-    ``n_pfx`` ints, never data-sized) computed from the already-
-    persisted band frame — and pushes them as an ``IN`` filter on the
-    partition column, which Catalyst turns into PartitionFilters on
-    the parquet scan: only the matching ``pfx=`` directories are read.
-    A caller that already holds that prefix list (the streaming core
-    collects it as its batch-emptiness probe) passes ``pfxs`` to skip
-    the collect job — one fewer Spark job per micro-batch.
+    When the index carries a ``pfx`` partition column (a layout read
+    through :class:`BandIndex`, e.g. by :func:`read_band_index`) the
+    probe first collects the new batch's DISTINCT bucket prefixes
+    under the modulus in that column's metadata (a ``pfx`` column
+    without one raises) — a driver-bounded set (≤ ``n_pfx`` ints)
+    computed from the already-persisted band frame — and pushes them
+    as an ``IN`` filter on the partition column, which Catalyst turns
+    into PartitionFilters on the parquet scan: only the matching
+    ``pfx=`` directories are read.  A caller that already holds that
+    prefix list (the streaming core collects it as its
+    batch-emptiness probe) passes ``pfxs`` to skip the collect job.
 
     ``max_bucket_size`` caps bucket populations on EACH side
     independently (anti-join shape on the index so its scan stays
@@ -1153,14 +1184,13 @@ def band_probe_pairs(
     """
     if "pfx" in index.columns:
         if pfxs is None:
-            pfxs = [
-                r[0]
-                for r in new_bands.select(
-                    band_pfx(F.col("bucket"), n_pfx).alias("p")
+            n_pfx = index.schema["pfx"].metadata.get("n_pfx")
+            if n_pfx is None:
+                raise ValueError(
+                    "band index frame has a pfx column but no recorded "
+                    "modulus; open stored layouts with read_band_index"
                 )
-                .distinct()
-                .collect()
-            ]
+            pfxs = _pfx_list(new_bands, n_pfx)
         index = index.filter(F.col("pfx").isin(pfxs)).drop("pfx")
     index = cap_buckets_antijoin(
         index, ("band", "bucket"), max_bucket_size, stats

@@ -244,9 +244,10 @@ def decontaminate_batch(
 
     ``eval_index``: a band frame (``minhash_band_buckets`` output or
     a :func:`~vcfdbr_spark.operators.dedup.read_band_index` layout,
-    which additionally prunes ``pfx=`` partitions to the batch's own
-    bucket spread).  ``None`` builds it in-plan from ``eval_docs``
-    (fine for one-shot use; persist it for repeated batches).
+    whose ``pfx=`` partitions the probe prunes to the batch's own
+    bucket spread under the modulus the layout recorded).  ``None``
+    builds it in-plan from ``eval_docs`` (fine for one-shot use;
+    persist it for repeated batches).
 
     Scale shape: the probe is :func:`~vcfdbr_spark.operators.dedup.
     band_probe_pairs` with ``self_pairs=False`` — batch-vs-batch

@@ -88,16 +88,6 @@ def brute_force_topk(
     )
 
 
-def sign_lsh_bucket(vec_col, n_components: int = 8):
-    """Bucket key from the signs of the first n components — a
-    deterministic, RNG-free hyperplane LSH (axis-aligned planes)."""
-    signs = F.transform(
-        F.slice(vec_col, 1, n_components),
-        lambda x: F.when(x.cast("double") >= 0, F.lit("1")).otherwise(F.lit("0")),
-    )
-    return F.concat_ws("", signs)
-
-
 def sign_band_buckets(vec_col, n_bands: int = 4, bits_per_band: int = 16):
     """Array of per-band sign buckets; band b hashes components
     [b·bpb, (b+1)·bpb).  The MinHash-style banding trade-off
@@ -564,9 +554,9 @@ def write_ivf_index(
     ``centroids`` defaults to :func:`ivf_train` on the corpus (the
     deterministic k-means path); pass a frame to pin externally
     trained centroids.  The sidecar guard is the same class as the
-    band-index ``_band_params``: probing with different centroids
-    than the lists were assigned under silently searches the wrong
-    lists, so :func:`ivf_topk_indexed` always reads the sidecar.
+    band index's pinned band parameters: probing with different
+    centroids than the lists were assigned under silently searches
+    the wrong lists, so :func:`ivf_topk_indexed` always reads the sidecar.
     ``mode="append"`` (streaming maintenance) validates the sidecar
     matches the assignment centroids first.
     """
@@ -972,58 +962,31 @@ def write_embedding_band_index(
     mode: str = "overwrite",
 ) -> None:
     """Persist an :func:`embedding_band_index` frame in the
-    partition-prunable ``dedup.write_band_index`` layout, recording
-    the band parameters in a ``_band_params`` sidecar so probes
-    cannot silently band a batch with a different width/count (the
-    same guard class as the layout's ``_n_pfx`` modulus check)."""
-    import json as _json
+    partition-prunable ``dedup.write_band_index`` layout with the band
+    parameters pinned (``dedup.BandIndex``), so probes cannot silently
+    band a batch with a different width/count.  ``mode="append"``
+    raises on parameters or an ``n_pfx`` that conflict with the
+    recorded ones; an omitted ``n_pfx`` resumes the recorded one."""
+    from vcfdbr_spark.operators.dedup import BandIndex
 
-    from vcfdbr_spark import fs as _fs
-    from vcfdbr_spark.operators.dedup import DEFAULT_N_PFX, write_band_index
-
-    spark = index.sparkSession
+    params = {"bits": bits, "n_bands": n_bands, "stride": ADAPTIVE_BAND_STRIDE}
     if mode == "append":
-        raw = _fs.read_text(spark, f"{path}/_band_params")
-        if raw:
-            stored = _json.loads(raw)
-            if (stored["bits"], stored["n_bands"]) != (bits, n_bands):
-                raise ValueError(
-                    f"embedding band index at {path} is pinned at "
-                    f"bits={stored['bits']}, n_bands={stored['n_bands']}; "
-                    f"appending bands built at ({bits}, {n_bands}) would "
-                    f"mix incompatible bucket spaces and silently lose "
-                    f"pairs at probe time"
-                )
-    n_pfx = DEFAULT_N_PFX if n_pfx is None else n_pfx
-    write_band_index(index, path, n_pfx=n_pfx, mode=mode)
-    _fs.write_text(
-        spark,
-        f"{path}/_band_params",
-        _json.dumps({"bits": bits, "n_bands": n_bands,
-                     "stride": ADAPTIVE_BAND_STRIDE}),
-    )
+        BandIndex(index.sparkSession, path, n_pfx, params).extend(index)
+    else:
+        BandIndex.put(index, path, n_pfx, params, mode)
 
 
 def read_embedding_band_index(spark, path: str) -> tuple[DataFrame, int, int]:
     """Open a :func:`write_embedding_band_index` layout; returns
-    ``(frame, bits, n_bands)`` with the pinned parameters from the
-    ``_band_params`` sidecar.  Raises on a missing sidecar — probing
-    with re-derived parameters against an index of unknown vintage
-    is exactly the silent-pair-loss this layout exists to prevent."""
-    import json as _json
+    ``(frame, bits, n_bands)`` with the pinned parameters.  Raises on a
+    layout without them — probing with re-derived parameters against
+    an index of unknown vintage is exactly the silent-pair-loss this
+    layout exists to prevent."""
+    from vcfdbr_spark.operators.dedup import BandIndex
 
-    from vcfdbr_spark import fs as _fs
-    from vcfdbr_spark.operators.dedup import read_band_index
-
-    raw = _fs.read_text(spark, f"{path}/_band_params")
-    if not raw:
-        raise ValueError(
-            f"embedding band index at {path} has no _band_params "
-            f"sidecar; rebuild with write_embedding_band_index (probing "
-            f"with re-derived parameters can silently lose pairs)"
-        )
-    params = _json.loads(raw)
-    return read_band_index(spark, path), params["bits"], params["n_bands"]
+    index = BandIndex(spark, path)
+    params = index.pinned()
+    return index.read(), params["bits"], params["n_bands"]
 
 
 def incremental_embedding_dup_pairs(
@@ -1035,7 +998,6 @@ def incremental_embedding_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_pfx: int | None = None,
     max_bucket_size: int | None = None,
     stats: dict | None = None,
     materialize: bool = True,
@@ -1075,10 +1037,8 @@ def incremental_embedding_dup_pairs(
     )
     if materialize:
         new_b = new_b.persist()
-    kwargs = {} if n_pfx is None else {"n_pfx": n_pfx}
     cand = band_probe_pairs(
-        new_b, index, id_col,
-        max_bucket_size=max_bucket_size, stats=stats, **kwargs,
+        new_b, index, id_col, max_bucket_size=max_bucket_size, stats=stats
     )
     allv = corpus.select(id_col, vec_col).unionByName(
         new_vecs.select(id_col, vec_col)

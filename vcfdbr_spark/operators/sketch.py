@@ -113,7 +113,9 @@ def kmv_overlap(
     side that contains it), J = |M ∩ K_A ∩ K_B| / |M|, and every
     cardinality is (|K|−1)·H/max(K) when its sketch filled (the
     exact |K| otherwise — a sketch smaller than k IS the full
-    distinct set).
+    distinct set).  An empty side gives a zero-overlap row: Jaccard,
+    intersection and both containments 0, ``merged_k`` the other
+    side's filled slots.
 
     Scale: each side moves at most its sketch (k rows) after its
     bottom-k pass (see :func:`kmv_bottom_k` for the prefiltered scan
@@ -123,6 +125,15 @@ def kmv_overlap(
     ka = kmv_bottom_k(a, value_col, k, prefilter=prefilter)
     kb = kmv_bottom_k(b, value_col, k, prefilter=prefilter)
     return kmv_overlap_sketches(ka, kb, k)
+
+
+def _ratio(num: str, den: str):
+    """``num / den`` rounded to 6 places, 0.0 when ``den`` is 0: an
+    empty sketch overlaps nothing (the division alone would raise
+    ``DIVIDE_BY_ZERO`` under ANSI mode)."""
+    return F.when(
+        F.col(den) > 0, F.round(F.col(num) / F.col(den), 6)
+    ).otherwise(F.lit(0.0))
 
 
 def kmv_overlap_sketches(ka: DataFrame, kb: DataFrame, k: int) -> DataFrame:
@@ -164,9 +175,7 @@ def kmv_overlap_sketches(ka: DataFrame, kb: DataFrame, k: int) -> DataFrame:
         .crossJoin(_card(kb, "kmv_card_b"))
         .select(
             F.col("merged_k").cast("long").alias("merged_k"),
-            F.round(F.col("n_both") / F.col("merged_k"), 6).alias(
-                "kmv_jaccard"
-            ),
+            _ratio("n_both", "merged_k").alias("kmv_jaccard"),
             F.when(
                 F.col("merged_k") < k, F.col("merged_k").cast("long")
             )
@@ -191,11 +200,7 @@ def kmv_overlap_sketches(ka: DataFrame, kb: DataFrame, k: int) -> DataFrame:
         )
         .select(
             "*",
-            F.round(
-                F.col("kmv_intersection") / F.col("kmv_card_a"), 6
-            ).alias("containment_a"),
-            F.round(
-                F.col("kmv_intersection") / F.col("kmv_card_b"), 6
-            ).alias("containment_b"),
+            _ratio("kmv_intersection", "kmv_card_a").alias("containment_a"),
+            _ratio("kmv_intersection", "kmv_card_b").alias("containment_b"),
         )
     )

@@ -12,7 +12,7 @@ design (pipeline/03-index-db.R:37-43).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -35,7 +35,3 @@ def write_bucketed(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -21,11 +21,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
-    plan = formatted_plan(df)
-    return {n: (n in plan) for n in needles}
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries of every parquet scan in the plan."""
     import re

@@ -174,14 +174,3 @@ def read_header(path: str, max_bytes: int = 16 * 1024 * 1024) -> VcfHeader:
                 break
     return parse_header_lines(lines)
 
-
-def dedup_lower(names: list[str]) -> list[str]:
-    """Lowercase names and mark duplicates for dropping — the reference
-    keeps the FIRST occurrence (pipeline/02-build-db.R:346-348)."""
-    seen: set[str] = set()
-    out = []
-    for n in names:
-        low = n.lower()
-        out.append((low, low not in seen))
-        seen.add(low)
-    return out

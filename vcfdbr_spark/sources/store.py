@@ -201,9 +201,13 @@ def write_small(path: str, samples: DataFrame, metadata: dict[str, DataFrame]) -
 
 
 def write_gene_map(path: str, variant_impact: DataFrame) -> None:
-    """gene_map, one file, built from ``variant_impact``."""
-    build_gene_map(variant_impact).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/gene_map"
+    """gene_map, one file, built from ``variant_impact``, replaced by
+    :func:`vcfdbr_spark.fs.swap_dir` so a failed write leaves the old
+    map readable."""
+    _fs.swap_dir(
+        variant_impact.sparkSession,
+        f"{path}/gene_map",
+        build_gene_map(variant_impact).coalesce(1).write.parquet,
     )
 
 

@@ -198,13 +198,12 @@ def stream_semantic_dedup(
     (:func:`_stream_banded_dedup`) — only the banding function and id
     column differ.
 
-    Band parameters are PINNED for the stream's life in the index's
-    ``_band_params`` sidecar, validated on every restart like the
-    ``n_pfx`` modulus (:class:`~vcfdbr_spark.operators.dedup.
-    BandIndex`): a stream has no final corpus count to derive the
-    adaptive width from, and re-deriving per batch would band new
-    batches into a DIFFERENT bucket space than the accumulated index
-    — silent candidate-pair loss.  Omitted parameters resume with the
+    Band parameters are PINNED for the stream's life by its index
+    (:class:`~vcfdbr_spark.operators.dedup.BandIndex`), validated on
+    every restart like the ``n_pfx`` modulus: a stream has no final
+    corpus count to derive the adaptive width from, and re-deriving
+    per batch would band new batches into a DIFFERENT bucket space
+    than the accumulated index — silent candidate-pair loss.  Omitted parameters resume with the
     recorded ones; a conflicting explicit one raises.  Defaults for a
     new stream: ``bits=16`` (right-sized up to ~2^12-vector corpora
     under the batch-side adaptive policy) and the recall-targeted
@@ -720,7 +719,6 @@ def _stream_banded_dedup(
 
     index.record()
     pairs_dir = f"{out_dir}/pairs"
-    n_pfx = index.n_pfx
     if max_bucket_size is None:
         max_bucket_size = DEFAULT_MAX_BUCKET_SIZE
 
@@ -751,7 +749,7 @@ def _stream_banded_dedup(
         if history is not None:
             if post_batch is None:
                 pairs = band_probe_pairs(
-                    bands, history, id_col=id_col, n_pfx=n_pfx,
+                    bands, history, id_col=id_col,
                     max_bucket_size=max_bucket_size, pfxs=pfxs,
                 )
             else:
@@ -759,7 +757,7 @@ def _stream_banded_dedup(
                 # pairs separately; their union is the same distinct
                 # pair set the unsplit path writes
                 cross = band_probe_pairs(
-                    bands, history, id_col=id_col, n_pfx=n_pfx,
+                    bands, history, id_col=id_col,
                     max_bucket_size=max_bucket_size, self_pairs=False,
                     pfxs=pfxs,
                 ).persist()
@@ -839,8 +837,10 @@ def stream_decontaminate(
     identical survivor set from the same static index
     (delete-before-write ``batch=N`` keeps output exactly-once).
     ``eval_index_dir``: a :func:`~vcfdbr_spark.operators.dedup.
-    write_band_index` layout (pfx-pruned probes); omitted, the band
-    frame is built from ``eval_docs_path`` once at stream start.
+    write_band_index` layout, opened by ``read_band_index`` so probes
+    prune its ``pfx=`` dirs under the modulus it recorded; omitted,
+    the band frame is built from ``eval_docs_path`` once at stream
+    start.
     """
     from vcfdbr_spark.operators.dedup import (
         minhash_band_buckets,
