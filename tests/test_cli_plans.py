@@ -1039,3 +1039,170 @@ def test_cli_build_training_set(spark, tmp_path, capsys):
     assert set(r["split"] for r in got.select("split").distinct().collect()) <= {"train", "val"}
     assert 0 < got.count() <= 80
     assert "n_tokens" in got.columns
+
+
+@pytest.fixture(scope="module")
+def cli_store(spark, tmp_path_factory):
+    """One toy store, built and then appended to once (so the tables
+    hold two sorted file sets), shared by the store subcommand tests."""
+    d = tmp_path_factory.mktemp("cli_store")
+    vcf = write_vcf(str(d / "toy.vcf"))
+    prefix = str(d / "db")
+    assert cli_main(["build", "--vcf", vcf, "--prefix", prefix]) == 0
+    assert cli_main(["append", "--vcf", vcf, "--prefix", prefix]) == 0
+    return prefix
+
+
+@pytest.fixture(scope="module")
+def cli_corpus(spark, tmp_path_factory):
+    """One small labeled corpus (``a``) and a second corpus (``b``)
+    sharing half of its texts, plus stream-sketch state dirs of both at
+    k=8 and of ``a`` at k=4."""
+    d = tmp_path_factory.mktemp("cli_corpus")
+    shared = "one two three four five six seven eight"
+    rows = [
+        (i, f"{shared} doc{i}" if i % 4 == 0 else f"unique words for doc {i}",
+         f"s{i % 3}", "en" if i % 2 else "de", float(i % 5))
+        for i in range(12)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, source string, lang string, "
+        "score double"
+    )
+    paths = {"a": str(d / "a"), "b": str(d / "b")}
+    docs.coalesce(1).write.parquet(paths["a"])
+    docs.filter(F.col("doc_id") % 2 == 0).unionByName(
+        docs.filter(F.col("doc_id") % 2 == 1)
+        .withColumn("text", F.concat(F.col("text"), F.lit(" b")))
+    ).coalesce(1).write.parquet(paths["b"])
+    for name, src, k in (("sk_a", "a", 8), ("sk_b", "b", 8), ("sk_a4", "a", 4)):
+        paths[name] = str(d / name)
+        assert cli_main(["stream-sketch", "--source", paths[src],
+                         "--out", paths[name], "--k", str(k)]) == 0
+    return paths
+
+
+def test_cli_compact(spark, cli_store, capsys):
+    """compact rewrites one store table into --partitions files and
+    keeps its rows."""
+    geno = f"{cli_store}/variant_geno"
+    before = sorted(map(tuple, spark.read.parquet(geno).collect()))
+    assert len(before) == 48
+    assert cli_main(["compact", "--prefix", cli_store,
+                     "--partitions", "1"]) == 0
+    assert capsys.readouterr().out == f"compacted {geno}: 48 rows\n"
+    assert sorted(map(tuple, spark.read.parquet(geno).collect())) == before
+
+
+def test_cli_sql(spark, cli_store, capsys):
+    """sql prints at most 50 rows as dicts, then the exact count; a
+    path with no store is an ERROR and exit 1."""
+    query = ("SELECT variant_id, chr, start FROM variant_info "
+             "ORDER BY variant_id LIMIT 3")
+    assert cli_main(["sql", "--prefix", cli_store, "--query", query]) == 0
+    want = [str(r.asDict()) for r in spark.read.parquet(
+        f"{cli_store}/variant_info").select("variant_id", "chr", "start")
+        .orderBy("variant_id").limit(3).collect()]
+    assert capsys.readouterr().out.splitlines() == want + ["(3 rows)"]
+    # display cap: 50 rows printed, the count still exact
+    assert cli_main(["sql", "--prefix", cli_store, "--query",
+                     "SELECT id FROM range(60)"]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert lines == [str({"id": i}) for i in range(50)] + ["(60 rows)"]
+    missing = f"{cli_store}_missing"
+    assert cli_main(["sql", "--prefix", missing, "--query", "SELECT 1"]) == 1
+    cap = capsys.readouterr()
+    assert cap.out == ""
+    assert cap.err == (
+        f"ERROR: no vcfdb store at '{missing}' (missing "
+        f"_vcfdb_manifest.json — run 'build' first)\n"
+    )
+
+
+def test_cli_pull_rejects_malformed_ids(spark, cli_store, capsys):
+    """A malformed --ids list is an ERROR naming the flag, exit 1, not
+    a traceback."""
+    for ids in ("1,x", "1,", ""):
+        assert cli_main(["pull", "--prefix", cli_store, "--ids", ids]) == 1
+        cap = capsys.readouterr()
+        assert cap.out == ""
+        assert cap.err == (
+            f"ERROR: --ids wants comma-separated integer variant ids, "
+            f"got {ids!r}\n"
+        )
+
+
+_OVERLAP_LINE = (
+    "jaccard=0.375 union=12 intersection=4 containment_a=0.444444 "
+    "containment_b=0.444444 (merged_k=8/8)\n"
+)
+
+
+def test_cli_corpus_overlap(spark, cli_corpus, capsys):
+    """corpus-overlap over two parquet corpora, and over their two
+    stream-sketch state dirs, print the same estimate."""
+    assert cli_main(["corpus-overlap", "--a", cli_corpus["a"],
+                     "--b", cli_corpus["b"], "--k", "8"]) == 0
+    assert capsys.readouterr().out == _OVERLAP_LINE
+    assert cli_main(["corpus-overlap", "--a", cli_corpus["sk_a"],
+                     "--b", cli_corpus["sk_b"], "--from-sketches"]) == 0
+    assert capsys.readouterr().out == _OVERLAP_LINE
+
+
+def test_cli_corpus_overlap_sketch_k_mismatch(spark, cli_corpus, capsys):
+    """Two sketches of different k cannot be compared: an ERROR on
+    stderr that names the fix, exit 1."""
+    assert cli_main(["corpus-overlap", "--a", cli_corpus["sk_a"],
+                     "--b", cli_corpus["sk_a4"], "--from-sketches"]) == 1
+    cap = capsys.readouterr()
+    assert cap.out == ""
+    assert cap.err == (
+        "ERROR: sketch k mismatch: 8 vs 4 — re-run stream-sketch on "
+        "both sources with one --k\n"
+    )
+
+
+def test_cli_quality_prune(spark, cli_corpus, tmp_path, capsys):
+    """quality-prune keeps the top half of each lang by score."""
+    out = str(tmp_path / "pruned")
+    assert cli_main(["quality-prune", "--docs", cli_corpus["a"], "--out", out,
+                     "--score-col", "score", "--keep-num", "1",
+                     "--keep-den", "2"]) == 0
+    assert capsys.readouterr().out == (
+        f"pruned {cli_corpus['a']} → {out}: kept 6/12 "
+        f"(top 1/2 per lang by score)\n"
+    )
+    kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+    assert kept == [2, 3, 4, 7, 8, 9]
+
+
+def test_cli_source_overlap(spark, cli_corpus, tmp_path, capsys):
+    """source-overlap prints the source-pair matrix, or writes it with
+    --out."""
+    args = ["source-overlap", "--docs", cli_corpus["a"],
+            "--window", "4", "--stride", "2"]
+    assert cli_main(args) == 0
+    pairs = (("s0", "s1"), ("s0", "s2"), ("s1", "s2"))
+    # every pair ties on containment, so only the set of lines is fixed
+    assert sorted(capsys.readouterr().out.splitlines()) == [
+        f"{a} ~ {b}: shared=4 cont_a=0.5 cont_b=0.5 jaccard=0.333333"
+        for a, b in pairs
+    ]
+    out = str(tmp_path / "mat")
+    assert cli_main(args + ["--out", out]) == 0
+    assert capsys.readouterr().out == f"wrote 3 source-pair rows to {out}\n"
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == [(a, b, 4, 8, 8, 0.5, 0.5, 0.333333) for a, b in pairs]
+
+
+def test_cli_every_subcommand_has_a_handler():
+    """The parser is the subcommand table: each subcommand carries its
+    handler as the ``run`` default, so none can parse without one."""
+    import argparse
+
+    from vcfdbr_spark.cli import build_parser
+
+    subs = next(a for a in build_parser()._actions
+                if isinstance(a, argparse._SubParsersAction))
+    for name, sp in subs.choices.items():
+        assert callable(sp.get_default("run")), name

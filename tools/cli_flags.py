@@ -5,11 +5,9 @@ so two checkouts' command-line surfaces can be diffed:
     python tools/cli_flags.py > after.json    # in the other
     diff before.json after.json
 
-``cli.main`` builds its parser inline, so this runs ``main`` with
-``parse_args`` replaced by a hook that captures the parser and stops
-before any Spark session starts.  Per action it records the option
-strings, dest, default, type, choices, required flag, help, nargs,
-const and action class.
+The parser comes from ``cli.build_parser``, so no Spark session
+starts.  Per action it records the option strings, dest, default,
+type, choices, required flag, help, nargs, const and action class.
 """
 
 from __future__ import annotations
@@ -22,15 +20,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vcfdbr_spark import cli  # noqa: E402
-
-
-class _Captured(Exception):
-    def __init__(self, parser: argparse.ArgumentParser):
-        self.parser = parser
-
-
-def _capture(parser, *args, **kwargs):
-    raise _Captured(parser)
 
 
 def _action(a: argparse.Action) -> dict:
@@ -50,18 +39,8 @@ def _action(a: argparse.Action) -> dict:
 
 def cli_flags() -> dict:
     """``{subcommand: [action, ...]}`` for every ``vcfdb`` subcommand."""
-    orig = argparse.ArgumentParser.parse_args
-    argparse.ArgumentParser.parse_args = _capture
-    try:
-        cli.main([])
-    except _Captured as c:
-        parser = c.parser
-    else:
-        raise RuntimeError("cli.main returned without parsing arguments")
-    finally:
-        argparse.ArgumentParser.parse_args = orig
     subs = next(
-        a for a in parser._actions
+        a for a in cli.build_parser()._actions
         if isinstance(a, argparse._SubParsersAction)
     )
     return {

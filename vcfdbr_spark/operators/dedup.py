@@ -43,6 +43,14 @@ from vcfdbr_spark.functions.text import word_shingles
 DEFAULT_MAX_BUCKET_SIZE = 500
 
 
+def resolve_bucket_cap(max_bucket_size: int | None) -> int | None:
+    """A caller's bucket cap: ``None`` means
+    :data:`DEFAULT_MAX_BUCKET_SIZE`, ``0`` disables the cap (``None``)."""
+    if max_bucket_size is None:
+        return DEFAULT_MAX_BUCKET_SIZE
+    return max_bucket_size or None
+
+
 def record_hot_bucket_stats(
     frame: DataFrame,
     keys: tuple[str, ...],

@@ -712,15 +712,14 @@ def _stream_banded_dedup(
     replay-exactly-once contract.
     """
     from vcfdbr_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET_SIZE,
         band_probe_pairs,
         lsh_candidate_pairs,
+        resolve_bucket_cap,
     )
 
     index.record()
     pairs_dir = f"{out_dir}/pairs"
-    if max_bucket_size is None:
-        max_bucket_size = DEFAULT_MAX_BUCKET_SIZE
+    max_bucket_size = resolve_bucket_cap(max_bucket_size)
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # r14 tried an unconditional defaultParallelism repartition of
